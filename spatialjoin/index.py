@@ -274,6 +274,18 @@ def _refine_input_cols(bc, extra, point_probe: bool = False,
     return out
 
 
+def _check_finite(d):
+    """Worker-side guard for the reference's finite-distance contract
+    (index.rs:436). An explicit raise, not an ``assert``: ``python -O``
+    strips asserts, and a NaN distance fails every ``<=`` test, so the
+    pair would vanish without a word."""
+    if not np.isfinite(d).all():
+        raise ValueError(
+            "non-finite distance: every coordinate must be finite "
+            "(index.rs:436 contract; validate=True rejects such rows "
+            "up front)")
+
+
 def _rect_batch(x0, y0, x1, y1):
     """GeomBatch of N rects straight from four bbox arrays (no coords
     arrays ever materialized)."""
@@ -372,7 +384,7 @@ def _arrow_point_refine(bc, mode, how=None, max_d=None, slim="point",
                 names = ["big_id", "small_id"]
             else:
                 d = kernels.distance(A, ai, B, bi)
-                assert np.isfinite(d).all(), "non-finite distance (index.rs:436)"
+                _check_finite(d)
                 mask = d <= max_d
                 arrays = [pa.array(bid[mask]), pa.array(sid[mask]),
                           pa.array(d[mask])]
@@ -428,7 +440,7 @@ def _arrow_pair_refine(mode, how=None, max_d=None, slim="point"):
                 )
             else:
                 d = kernels.distance(A, bi, B, bi)
-                assert np.isfinite(d).all(), "non-finite distance (index.rs:436)"
+                _check_finite(d)
                 mask = d <= max_d
                 yield pa.RecordBatch.from_arrays(
                     [pa.array(bid[mask]), pa.array(sid[mask]), pa.array(d[mask])],
@@ -497,8 +509,8 @@ class SpatialIndex:
         # multilevel (size-stratified) index: populated LEVELS the probe
         # side must cover (None = single-resolution index)
         self.levels = levels
-        # geometry-row count from the build stats job (None when the
-        # index was constructed directly; consumers fall back to a count)
+        # geometry-row count from the build stats job (set by build,
+        # the only constructor of an index)
         self.n_small_rows = None
 
     @property
@@ -1027,7 +1039,7 @@ class SpatialIndex:
             small_ids = stab.column("small_id").to_numpy()
             if op == "prox":
                 d = kernels.distance(A, ti, B, qi)
-                assert np.isfinite(d).all(), "non-finite distance (index.rs:436)"
+                _check_finite(d)
                 m = d <= max_d
             elif how == "intersects":
                 m = kernels.intersects(A, ti, B, qi)
@@ -1523,7 +1535,7 @@ class SpatialIndex:
                 A, ai, B = _refine_sides(pdf, bc)
                 bi = np.arange(len(pdf), dtype=np.int64)
                 d = kernels.distance(A, ai, B, bi)
-                assert np.isfinite(d).all(), "non-finite distance (index.rs:436)"
+                _check_finite(d)
                 mask = d <= max_d
                 out = pdf.loc[mask, out_cols]
                 out.insert(2, "distance", d[mask])

@@ -4,19 +4,26 @@ North-rule addition (BASELINE.json): the reference crate only supports
 distance-THRESHOLD joins (proximity_map, src/index.rs:422-447); kNN is
 built on the same cell grid + kernels:
 
-round r:  candidates = big covering expanded by Chebyshev ring r
-          (pure-JVM sequence/explode of dx/dy offsets) equi-joined to
-          the small cell index, refined to exact distances (kernels),
-          then windowed top-k per probe with deterministic tie-break
-          (distance, small_id).
-done:     a probe is finished when it has >= k neighbors AND its k-th
-          distance <= r * min(cell_w, cell_h): any geometry not yet a
-          candidate has every covered cell at Chebyshev cell-distance
-          > r from the probe's covering, hence Euclidean distance
-          >= r * min(cell_w, cell_h) — it cannot beat the current k-th.
+round r:  candidates = big covering grown by Chebyshev ring r (one
+          pure-JVM sequence/explode per probe over the clipped cell
+          block) equi-joined to the small cell index, refined to exact
+          distances, then windowed top-k per probe with deterministic
+          tie-break (distance, small_id).
+done:     a probe is finished when its rank-k row has distance
+          STRICTLY < r * min(cell_w, cell_h) — a filter on the round's
+          cached top-k (row_number ranks run 1..cnt with rising
+          distance, so a rank-k row exists iff cnt >= k and holds the
+          k-th distance). Any geometry not yet a candidate has every
+          covered cell at Chebyshev cell-distance > r from the probe's
+          covering, hence Euclidean distance >= r * min(cell_w, cell_h);
+          strict < keeps a tie at exactly that bound (an unseen
+          geometry with a smaller id) from being decided early.
 loop:     unfinished probes escalate with ring *= 4 (driver-side loop,
           anti-joining finished probes); terminates when the ring spans
-          the grid.
+          the grid, or — on a broadcast index — with an exact
+          brute-force sweep once at most 4096 probes are pending.
+          Each round logs round, ring, pending count and wall seconds
+          at DEBUG on the ``spatialjoin.knn`` logger (no extra jobs).
 
 Output: DF[big_id, small_id, distance, rank] with rank 1..k
 (row_number — exactly k rows per probe when the small side has >= k
@@ -25,10 +32,12 @@ rows, fewer otherwise). Deterministic regardless of parallelism.
 
 from __future__ import annotations
 
+import logging
+import time
 import warnings
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -42,29 +51,60 @@ from .index import (
     _refine_sides,
     validate_geoms,
     with_bbox,
-    with_cells,
 )
 
 _WARNED_CKPT_CLEANUP: list = []  # once-per-process reliable-ckpt warning
+_log = logging.getLogger(__name__)
 
 
-def _ring_expand(df: DataFrame, r: int, n: int, res: int) -> DataFrame:
-    """Expand each (cx, cy) covering cell by Chebyshev ring r — JVM only.
-    Output rows carry (cx, cy, cell) of the RING cell."""
-    if r <= 0:
-        return df
-    df = df.withColumn("dx", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-    df = df.withColumn("dy", F.explode(F.sequence(F.lit(-r), F.lit(r))))
-    df = df.withColumn("ncx", F.col("cx") + F.col("dx")).withColumn("ncy", F.col("cy") + F.col("dy"))
-    df = df.where((F.col("ncx") >= 0) & (F.col("ncx") < n) & (F.col("ncy") >= 0) & (F.col("ncy") < n))
-    df = df.drop("cell", "dx", "dy", "cx", "cy")
-    df = df.withColumnRenamed("ncx", "cx").withColumnRenamed("ncy", "cy")
-    return df.withColumn(
-        "cell",
-        F.lit(res << 58).cast("long")
-        .bitwiseOR(F.shiftleft(F.col("cx"), 29))
-        .bitwiseOR(F.col("cy")),
+def _cell_coord_sql(col: str, origin: float, size: float, n: int) -> str:
+    """index._clamped_cell_coord as SQL text: the same double ops
+    (floor((col - origin) / size) clamped to [0, n-1]). The ring loop
+    builds its per-round plans from SQL text because every PySpark
+    Column call costs a handful of py4j round trips (measured about
+    1 ms each on the driver, versus one parse for a whole expression)."""
+    return (f"greatest(0L, least({n - 1}L, "
+            f"CAST(floor(({col} - ({origin!r}D)) / {size!r}D) AS BIGINT)))")
+
+
+def _cell_id_sql(res: int, cx: str, cy: str) -> str:
+    """The covering's cell id (level << 58 | cx << 29 | cy) as SQL text."""
+    return f"{res << 58}L | shiftleft({cx}, 29) | ({cy})"
+
+
+def _ring_cells(df: DataFrame, grid: Grid, res: int, r: int) -> DataFrame:
+    """Probe rows exploded to every cell within Chebyshev ring r of their
+    covering, as (cx, cy, cell) columns — pure JVM, one generator and
+    two projections. The cells within ring r of a rectangle of cells
+    are that rectangle grown by r on every side and clipped to the
+    grid, so each (probe, cell) pair comes out exactly once; a point
+    probe covers one cell, so its ring is a (2r+1)^2 block."""
+    n = 1 << res
+    cw, ch = grid.cell_size(res)
+    x0 = f"greatest({_cell_coord_sql('b_xmin', grid.x0, cw, n)} - {r}L, 0L)"
+    x1 = f"least({_cell_coord_sql('b_xmax', grid.x0, cw, n)} + {r}L, {n - 1}L)"
+    y0 = f"greatest({_cell_coord_sql('b_ymin', grid.y0, ch, n)} - {r}L, 0L)"
+    y1 = f"least({_cell_coord_sql('b_ymax', grid.y0, ch, n)} + {r}L, {n - 1}L)"
+    cols = [f"`{c}`" for c in df.columns]
+    df = df.selectExpr(
+        "*", f"{x0} AS _x0", f"{y0} AS _y0", f"{y1} - {y0} + 1L AS _h",
+        f"explode(sequence(0L, ({x1} - {x0} + 1L) * ({y1} - {y0} + 1L) - 1L)) AS _t",
     )
+    return df.selectExpr(
+        *cols, "_x0 + _t div _h AS cx", "_y0 + _t % _h AS cy",
+        f"{_cell_id_sql(res, '_x0 + _t div _h', '_y0 + _t % _h')} AS cell",
+    )
+
+
+def _fine_cells(df: DataFrame, res: int, fine_res: int) -> DataFrame:
+    """Rows carrying a (cx, cy) cell at ``res`` exploded to ALL its
+    subcells at ``fine_res``; ``cell`` becomes the fine cell id."""
+    ks = fine_res - res
+    cols = [f"`{c}`" for c in df.columns if c not in ("cx", "cy", "cell")]
+    df = df.selectExpr("*", f"explode(sequence(0L, {(1 << 2 * ks) - 1}L)) AS _t")
+    fcx = f"shiftleft(cx, {ks}) | shiftright(_t, {ks})"
+    fcy = f"shiftleft(cy, {ks}) | (_t & {(1 << ks) - 1}L)"
+    return df.selectExpr(*cols, f"{_cell_id_sql(fine_res, fcx, fcy)} AS cell")
 
 
 def knn_join(
@@ -115,7 +155,7 @@ def _auto_initial_ring(idx: SpatialIndex, k: int) -> int:
     # size ring 0 so the expected candidate count per probe is ~2k:
     # ring r scans (2r+1)^2 cells at density n_small / 4^res. The row
     # count comes from the build stats job (no extra driver actions on
-    # the query path); direct-constructed indexes fall back to a count.
+    # the query path).
     # INTENTIONAL (r4): density uses the GEOMETRY-row count, not the
     # per-cell covering-row count used before the build-stats change —
     # for small sides whose geometries span multiple cells this
@@ -123,12 +163,7 @@ def _auto_initial_ring(idx: SpatialIndex, k: int) -> int:
     # round-0 candidates, one fewer expansion round); results are
     # identical either way since ring expansion converges.
     n_cells = float(4 ** idx.resolution)
-    n_small = idx.n_small_rows
-    if n_small is None:
-        n_small = idx.small_cells.count()
-        if idx.small_fine is not None:
-            n_small += idx.small_fine.count()
-    density = max(n_small / n_cells, 1e-12)
+    density = max(idx.n_small_rows / n_cells, 1e-12)
     return int(np.clip(np.ceil((np.sqrt(2.0 * k / density) - 1.0) / 2.0),
                        1, 1 << idx.resolution))
 
@@ -156,13 +191,24 @@ def _knn_with_index(spark, idx: SpatialIndex, big_df, k, validate, initial_ring,
     b = with_bbox(b, "b", buffer=0.0, points=point_probe)
     b_base = b.persist()
 
+    # point-vs-point: the ring-candidate distances stay entirely in the
+    # JVM (same float ops as the numpy kernel: sqrt(dx*dx + dy*dy) on
+    # the unbuffered scalar columns) — no Arrow boundary in the loop at
+    # all; only the bounded straggler sweep touches Python
+    all_points = point_probe and idx._small_kinds() == {KP}
     small = idx.small_cells
     small_fine = idx.small_fine
-    bc = idx.small_geo_bc
-    if bc is not None:
-        small = small.drop("s_kind", "s_coords", "s_rings")
+    if idx.broadcast_small:
+        # a broadcast index never carries its geometry through the cell
+        # join: the Python refine and the straggler sweep read it from
+        # the geometry broadcast, the all-point route from s_px/s_py
+        small = F.broadcast(small.drop("s_kind", "s_coords", "s_rings"))
         if small_fine is not None:
-            small_fine = small_fine.drop("s_kind", "s_coords", "s_rings")
+            small_fine = F.broadcast(small_fine.drop("s_kind", "s_coords", "s_rings"))
+    # the geometry broadcast is collected lazily, on first read: only
+    # the Python refine reads it here, and the sweep below — the
+    # all-point route never pays for its collect job
+    bc = idx.small_geo_bc if idx.broadcast_small and not all_points else None
     out_schema = T.StructType(
         [
             T.StructField("big_id", T.LongType(), False),
@@ -224,27 +270,19 @@ def _knn_with_index(spark, idx: SpatialIndex, big_df, k, validate, initial_ring,
 
     from .index import _refine_input_cols
 
-    def bcast(df):
-        return F.broadcast(df) if idx.broadcast_small else df
-
-    # point-vs-point: the ring-candidate distances stay entirely in the
-    # JVM (same float ops as the numpy kernel: sqrt(dx*dx + dy*dy) on
-    # the unbuffered scalar columns) — no Arrow boundary in the loop at
-    # all; only the bounded straggler sweep touches Python
-    all_points = point_probe and idx._small_kinds() == {KP}
     if all_points:
-        refine_cols = [
-            "big_id", "small_id",
-            F.col("b_xmin").alias("bx"), F.col("b_ymin").alias("by"),
-            "s_px", "s_py",
-        ]
+        # the distance is computed in the pair projection itself
+        def pairs(cand):
+            return cand.selectExpr(
+                "big_id", "small_id",
+                "sqrt((s_px - b_xmin) * (s_px - b_xmin) + (s_py - b_ymin) * (s_py - b_ymin))"
+                " AS distance",
+            )
     else:
         refine_cols = _refine_input_cols(bc, [], point_probe=point_probe)
 
-    import os as _os
-    import time as _time
-
-    _dbg = _os.environ.get("SPARK_GRAFT_KNN_DEBUG") == "1"
+        def pairs(cand):
+            return cand.select(*refine_cols)
 
     results = []
     cached = [b_base]
@@ -253,107 +291,73 @@ def _knn_with_index(spark, idx: SpatialIndex, big_df, k, validate, initial_ring,
     rounds = 0
     while True:
         rounds += 1
-        _t0 = _time.perf_counter()
-        probe = with_cells(pending, "b", grid, res, keep_cxy=True)
-        probe = _ring_expand(probe, r, n, res)
-        cand = probe.join(bcast(small), on="cell", how="inner").select(*refine_cols)
+        t0 = time.perf_counter()
+        probe = _ring_cells(pending, grid, res, r)
+        cand = pairs(probe.join(small, "cell"))
         if small_fine is not None:
             # hot parents in the ring probe ALL their fine subcells, so
             # every hot-cell small row within Chebyshev ring r is still a
             # candidate and the done-criterion bound is unchanged
-            ks = idx.fine_resolution - res
-            ph = probe.join(F.broadcast(idx.hot_cells), "cell", "left_semi").drop("cell")
-            ph = ph.withColumn(
-                "fcx",
-                F.explode(F.sequence(F.shiftleft(F.col("cx"), ks),
-                                     F.shiftleft(F.col("cx") + 1, ks) - 1)),
-            ).withColumn(
-                "fcy",
-                F.explode(F.sequence(F.shiftleft(F.col("cy"), ks),
-                                     F.shiftleft(F.col("cy") + 1, ks) - 1)),
-            )
-            ph = ph.withColumn(
-                "cell",
-                F.lit(idx.fine_resolution << 58).cast("long")
-                .bitwiseOR(F.shiftleft(F.col("fcx"), 29))
-                .bitwiseOR(F.col("fcy")),
-            ).drop("fcx", "fcy", "cx", "cy")
-            cand_fine = ph.join(bcast(small_fine), on="cell", how="inner").select(*refine_cols)
-            cand = cand.unionByName(cand_fine)
-        # a pair may appear via several (probe-cell, ring-offset) paths
-        # and via both index levels; dedupe on ids before the
-        # (idempotent) refine to cut UDF work. Point-vs-point needs no
-        # dedup shuffle: each side covers exactly ONE cell, ring cells
-        # are distinct per probe, and a small point lives in either the
-        # cold or the fine level — every pair arises exactly once.
-        if not all_points:
-            cand = cand.dropDuplicates(["big_id", "small_id"])
+            ph = _fine_cells(probe.join(F.broadcast(idx.hot_cells), "cell", "left_semi"),
+                             res, idx.fine_resolution)
+            cand = cand.unionByName(pairs(ph.join(small_fine, "cell")))
+        # a pair may appear via several ring cells (a small geometry
+        # covering several cells) and via both index levels; dedupe on
+        # ids before the (idempotent) refine to cut UDF work.
+        # Point-vs-point needs no dedup shuffle: each side covers exactly
+        # ONE cell, ring cells are distinct per probe, and a small point
+        # lives in either the cold or the fine level — every pair arises
+        # exactly once.
         if all_points:
-            dists = cand.selectExpr(
-                "big_id", "small_id",
-                "sqrt((s_px - bx) * (s_px - bx) + (s_py - by) * (s_py - by)) AS distance",
-            )
+            dists = cand
         elif point_probe and bc is not None:
             from .index import _arrow_point_refine
 
-            dists = cand.mapInArrow(
+            dists = cand.dropDuplicates(["big_id", "small_id"]).mapInArrow(
                 _arrow_point_refine(bc, "prox", max_d=np.inf), out_schema
             )
         else:
-            dists = cand.mapInPandas(refine, out_schema)
-        w = Window.partitionBy("big_id").orderBy(F.col("distance").asc(), F.col("small_id").asc())
-        topk = (
-            dists.withColumn("rank", F.row_number().over(w))
-            .where(F.col("rank") <= k)
-        ).persist()  # reused by the done-check action AND the final union
+            dists = cand.dropDuplicates(["big_id", "small_id"]).mapInPandas(
+                refine, out_schema)
+        topk = dists.selectExpr(
+            "*", "row_number() OVER (PARTITION BY big_id ORDER BY distance, small_id) AS rank"
+        ).where(f"rank <= {k}").persist()  # read by the done-check AND the final union
         cached.append(topk)
-        if _dbg:
-            topk.count()
-            print(f"[knn] round {rounds} r={r} topk wall={_time.perf_counter() - _t0:.2f}")
-            _t0 = _time.perf_counter()
         covered = float(r) * min_dim
-        ring_spans_grid = r >= n
-        if ring_spans_grid:
+        if r >= n:  # the ring spans the grid: every top-k is final
             results.append(topk)
+            _log.debug("knn round=%d ring=%d pending=0 wall_s=%.3f (ring spans grid)",
+                       rounds, r, time.perf_counter() - t0)
             break
-        # a probe is done if it found k neighbors with kth dist <= covered
-        per_probe = topk.groupBy("big_id").agg(
-            F.count(F.lit(1)).alias("cnt"), F.max("distance").alias("kth")
-        )
-        # strict <: an unseen geometry at distance exactly `covered` with a
-        # smaller id could otherwise displace the current k-th on tie-break
-        # persist the (tiny) done-id set: the final union re-evaluates
-        # done_rows when materializing the checkpoint, and without this
-        # cache it would re-run the per_probe aggregation shuffle per
-        # round (measured as a top-3 stage of the query's fixed cost)
-        done_ids = per_probe.where(
-            (F.col("cnt") >= k) & (F.col("kth") < F.lit(covered))
-        ).select("big_id").persist()
-        cached.append(done_ids)
+        # a probe is done when its k-th distance is below `covered`.
+        # row_number ranks run 1..cnt with distances rising, so "a rank-k
+        # row exists" means cnt >= k and that row's distance IS the k-th:
+        # a filter on the cached topk, no aggregation shuffle. Strict <:
+        # an unseen geometry at distance exactly `covered` with a smaller
+        # id could otherwise displace the current k-th on tie-break
+        done_ids = topk.where(f"rank = {k} AND distance < {covered!r}D").select("big_id")
         pending_next = pending.join(done_ids, on="big_id", how="left_anti").persist()
         cached.append(pending_next)
         n_pending = pending_next.count()
         pending = pending_next
-        if _dbg:
-            print(f"[knn] round {rounds} done-check wall={_time.perf_counter() - _t0:.2f} pending={n_pending}")
+        _log.debug("knn round=%d ring=%d pending=%d wall_s=%.3f",
+                   rounds, r, n_pending, time.perf_counter() - t0)
         if n_pending == 0:
             # every probe finished this round: the done-filter semi join
             # would be the identity — ship the cached topk as-is
             results.append(topk)
             break
         results.append(topk.join(done_ids, on="big_id", how="left_semi"))
-        if bc is not None and n_pending <= 4096:
+        if idx.broadcast_small and n_pending <= 4096:
             # straggler sweep: exact brute force against the broadcast
             # index beats up to log4(grid) more ring-escalation rounds
+            bc = idx.small_geo_bc
             if point_probe:
-                rsel = pending.select(
-                    "big_id", F.col("b_xmin").alias("bx"), F.col("b_ymin").alias("by")
-                )
+                rsel = pending.selectExpr("big_id", "b_xmin AS bx", "b_ymin AS by")
             else:
                 rsel = pending.select("big_id", "b_kind", "b_coords", "b_rings")
             results.append(rsel.mapInPandas(brute_force_topk, topk_schema))
-            if _dbg:
-                print(f"[knn] brute-force sweep for {n_pending} stragglers")
+            _log.debug("knn sweep pending=%d", n_pending)
             break
         if rounds >= max_rounds:
             # probes remain pending, the ring does NOT span the grid, and
@@ -369,7 +373,7 @@ def _knn_with_index(spark, idx: SpatialIndex, big_df, k, validate, initial_ring,
                 f"{n}); raise max_rounds or initial_ring"
             )
         r *= 4
-    _t0 = _time.perf_counter()
+    t0 = time.perf_counter()
     out = results[0]
     for extra in results[1:]:
         out = out.unionByName(extra)
@@ -421,8 +425,7 @@ def _knn_with_index(spark, idx: SpatialIndex, big_df, k, validate, initial_ring,
         out = out.checkpoint(eager=True)
     else:
         out = out.localCheckpoint(eager=True)
-    if _dbg:
-        print(f"[knn] final union+checkpoint wall={_time.perf_counter() - _t0:.2f}")
+    _log.debug("knn checkpoint wall_s=%.3f", time.perf_counter() - t0)
     for df in cached:
         df.unpersist()
     return out

@@ -95,6 +95,23 @@ def test_validation_raises_through_spark(spark):
     idx.unpersist()
 
 
+@pytest.mark.parametrize("route", ["broadcast", "pairs", "with_geos"])
+def test_nonfinite_distance_raises_value_error(spark, route):
+    """validate=False lets a NaN coordinate reach the worker refine; the
+    finite-distance contract (index.rs:436) must then fail the query
+    with a ValueError, also under python -O (where an assert would
+    vanish and the pair silently drop)."""
+    small = geoms_to_df(spark, [(RECT, [float("nan"), -1.0, 1.0, 1.0]),
+                                (RECT, [2.0, 2.0, 3.0, 3.0])])
+    big = geoms_to_df(spark, [(POINT, [0.7, 0.0]), (POINT, [2.5, 2.5])])
+    idx = SpatialIndex.build(spark, small, max_distance=0.5, extent=(-4.0, -4.0, 4.0, 4.0),
+                             resolution=3, validate=False, broadcast=route != "pairs")
+    kw = {"with_geos": True} if route == "with_geos" else {"big_kinds": {POINT}}
+    with pytest.raises(Exception, match="ValueError: non-finite distance"):
+        idx.proximity_map(big, validate=False, **kw).collect()
+    idx.unpersist()
+
+
 def test_bad_max_distance_rejected(spark):
     small = geoms_to_df(spark, [(POINT, [0.0, 0.0])])
     from spatialjoin.geom import BadMaxDistance

@@ -140,6 +140,63 @@ def test_knn_k_larger_than_small_side(spark):
     assert rows == [(0, 1), (1, 2)]
 
 
+def _assert_knn_exact(got, want):
+    got = sorted((r.big_id, r.small_id, r.distance, r.rank) for r in got.collect())
+    assert [(g[0], g[1], g[3]) for g in got] == [(w[0], w[1], w[3]) for w in want]
+    for g, w in zip(got, want):
+        assert math.isclose(g[2], w[2], rel_tol=1e-12, abs_tol=1e-15)
+
+
+@pytest.mark.parametrize("big_kinds", [None, {POINT}])
+def test_knn_multi_round_escalation_exact(spark, caplog, big_kinds):
+    """Ring escalation without the broadcast sweep, on integer-grid
+    points (cell size exactly 1, so round 1's bound is exactly 1.0).
+    Probe (3, 4) has its two nearest sites tied at distance 1.0, ON the
+    bound: the strict done-test keeps it pending after round 1. Probe
+    (4, 4) has four sites tied at sqrt(2), broken by id. The probes far
+    outside the sites' extent find nothing in round 1 and finish only
+    once the ring spans the grid."""
+    import logging
+    import re
+
+    small_rows = [(POINT, [float(x), float(y)]) for x in range(1, 14, 2) for y in range(1, 14, 2)]
+    big_rows = [(POINT, [3.0, 4.0]), (POINT, [4.0, 4.0]), (POINT, [7.0, 7.0]),
+                (POINT, [0.0, 13.0]), (POINT, [100.0, 100.0]), (POINT, [-40.0, 6.0])]
+    caplog.set_level(logging.DEBUG, logger="spatialjoin.knn")
+    got = knn_join(spark, geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows), k=2,
+                   extent=(0.0, 0.0, 16.0, 16.0), resolution=4, broadcast=False,
+                   initial_ring=1, big_kinds=big_kinds)
+    rounds = [m for m in caplog.messages if m.startswith("knn round=")]
+    pending = [int(re.search(r"pending=(\d+)", m).group(1)) for m in rounds]
+    assert pending == [len(big_rows), 2, 0], rounds
+    assert not any(m.startswith("knn sweep") for m in caplog.messages)
+    _assert_knn_exact(got, _brute_knn(small_rows, big_rows, 2))
+
+
+def test_knn_geometry_broadcast_collected_only_for_sweep(spark):
+    """The all-point ring route computes distances in SQL: a call that
+    ends without the straggler sweep must leave the index's geometry
+    broadcast uncollected; one that sweeps collects it and stays exact."""
+    from spatialjoin.index import SpatialIndex
+
+    small_rows = [(POINT, [float(x), float(y)]) for x in range(16) for y in range(16)]
+    small = geoms_to_df(spark, small_rows)
+    inside = [(POINT, [x + 0.5, y + 0.25]) for x, y in ((1, 2), (7, 7), (14, 3), (9, 12))]
+    idx = SpatialIndex.build(spark, small, extent=(0.0, 0.0, 16.0, 16.0), resolution=4,
+                             validate=False)
+    assert idx.broadcast_small
+    got = idx.knn_join(geoms_to_df(spark, inside), 3, validate=False,
+                       initial_ring=2, big_kinds={POINT})
+    _assert_knn_exact(got, _brute_knn(small_rows, inside, 3))
+    assert idx._small_geo_bc_val is None
+    far = inside + [(POINT, [60.0, -20.0])]  # pending after round 1: swept
+    got = idx.knn_join(geoms_to_df(spark, far), 3, validate=False,
+                       initial_ring=1, big_kinds={POINT})
+    _assert_knn_exact(got, _brute_knn(small_rows, far, 3))
+    assert idx._small_geo_bc_val is not None
+    idx.unpersist()
+
+
 # -- tiles --------------------------------------------------------------------
 
 
