@@ -72,12 +72,18 @@ class Grid:
     # -- coordinate -> cell -------------------------------------------------
 
     def grid_coords(self, x, y, res: int):
-        """Clamped integer grid coordinates at ``res``."""
+        """Clamped integer grid coordinates at ``res`` — the same double
+        ops as the engine's SQL covering (floor((v - origin) / size)),
+        clamped BEFORE the integer cast so a coordinate far outside the
+        extent cannot overflow int64 (NaN maps to cell 0)."""
         n = 1 << res
         cw, ch = self.cell_size(res)
-        cx = np.floor((np.asarray(x, dtype=np.float64) - self.x0) / cw).astype(np.int64)
-        cy = np.floor((np.asarray(y, dtype=np.float64) - self.y0) / ch).astype(np.int64)
-        return np.clip(cx, 0, n - 1), np.clip(cy, 0, n - 1)
+
+        def axis(v, origin, size):
+            c = np.floor((np.asarray(v, dtype=np.float64) - origin) / size)
+            return np.clip(np.nan_to_num(c), 0, n - 1).astype(np.int64)
+
+        return axis(x, self.x0, cw), axis(y, self.y0, ch)
 
     def cell_of(self, x, y, res: int):
         cx, cy = self.grid_coords(x, y, res)

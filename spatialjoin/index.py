@@ -516,21 +516,20 @@ class SpatialIndex:
     @property
     def small_geo_bc(self):
         """(sorted_ids, GeomBatch) broadcast of the small geometry,
-        collected lazily on first access (r6): refine paths that stay
-        entirely in the JVM — rect/point SQL predicates, the unrolled
-        PIP, point-point distances — never access it, so their queries
-        skip the collect job and the driver->executor broadcast."""
+        collected lazily on first access (r6) by one Arrow collect:
+        refine paths that stay entirely in the JVM — rect/point SQL
+        predicates, the unrolled PIP — never access it, so their
+        queries skip the collect job and the driver->executor
+        broadcast. kNN on a broadcast index reads it in every task."""
         if self._small_geo_bc_val is None and self._small_geo_src is not None:
             src = self._small_geo_src
             self._small_geo_src = None
-            rows = src.collect()
-            rows.sort(key=lambda r: r.small_id)
-            ids = np.array([r.small_id for r in rows], dtype=np.int64)
-            batch = GeomBatch.from_columns(
-                np.array([r.s_kind for r in rows], dtype=np.int8),
-                [np.asarray(r.s_coords, dtype=np.float64) for r in rows],
-                [r.s_rings for r in rows],
-            )
+            # one Arrow collect, decoded as flat buffers (no Row objects)
+            tbl = src.toArrow()
+            tbl = tbl.take(np.argsort(tbl.column("small_id").to_numpy(), kind="stable"))
+            ids = tbl.column("small_id").to_numpy().astype(np.int64)
+            batch = GeomBatch.from_arrow(tbl.column("s_kind").to_numpy(),
+                                         tbl.column("s_coords"), tbl.column("s_rings"))
             self._small_geo_bc_val = self.spark.sparkContext.broadcast(
                 (ids, batch))
         return self._small_geo_bc_val

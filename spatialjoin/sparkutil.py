@@ -27,15 +27,18 @@ def get_spark(cpus: int | None = None, app: str = "spatialjoin", shuffle_partiti
     # scaling bench uses this: separate executors ≙ separate workers'
     # allocators/GC/Python daemons, like a real cluster)
     master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{cpus}]")
-    builder = SparkSession.builder.master(master)
-    if master.startswith("local-cluster"):
-        # executor JVMs spawn their own Python workers, which need the
-        # package on their path (a real deployment ships it with
-        # spark-submit --py-files, see bench/submit_job.py)
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-        builder = builder.config("spark.executorEnv.PYTHONPATH", repo)
+    # Python workers (local or on executor JVMs) import this package
+    # to run its UDFs; they inherit neither the driver's sys.path nor,
+    # once started outside the repo root, its working directory — so
+    # put the package's parent on their path for every master, ahead
+    # of any PYTHONPATH already set (a real deployment ships the
+    # package with spark-submit --py-files, see bench/submit_job.py)
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [repo] + [p for p in os.environ.get("PYTHONPATH", "").split(os.pathsep)
+                      if p and p != repo]
     return (
-        builder
+        SparkSession.builder.master(master)
+        .config("spark.executorEnv.PYTHONPATH", os.pathsep.join(paths))
         .appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle))
         .config("spark.sql.adaptive.enabled", "true")

@@ -33,12 +33,29 @@ def _brute_knn(small_rows, big_rows, k):
     return sorted(out)
 
 
-@pytest.mark.parametrize("seed,k", [(21, 1), (22, 3), (23, 7)])
-def test_knn_matches_brute_force(spark, seed, k):
+def _knn_route(caplog):
+    """The route named by the call's one ``knn route=`` DEBUG record."""
+    import re
+
+    routes = [re.match(r"knn route=(\S+)", m).group(1)
+              for m in caplog.messages if m.startswith("knn route=")]
+    assert len(routes) == 1, caplog.messages
+    return routes[0]
+
+
+@pytest.mark.parametrize("seed,k,broadcast", [
+    pytest.param(seed, k, bc, id=f"{seed}-{k}" + ("" if bc else "-rounds"))
+    for bc in (True, False) for seed, k in [(21, 1), (22, 3), (23, 7)]])
+def test_knn_matches_brute_force(spark, caplog, seed, k, broadcast):
+    import logging
+
     rng = random.Random(seed)
     small_rows = [(POINT, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for _ in range(50)]
     big_rows = [(POINT, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for _ in range(30)]
-    got = knn_join(spark, geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows), k=k)
+    caplog.set_level(logging.DEBUG, logger="spatialjoin.knn")
+    got = knn_join(spark, geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows), k=k,
+                   broadcast=broadcast)
+    assert _knn_route(caplog) == ("broadcast-local" if broadcast else "rounds")
     got = sorted((r.big_id, r.small_id, r.distance, r.rank) for r in got.collect())
     want = _brute_knn(small_rows, big_rows, k)
     assert [(g[0], g[1], g[3]) for g in got] == [(w[0], w[1], w[3]) for w in want]
@@ -75,12 +92,13 @@ def test_knn_reliable_checkpoint_cleanup_conf(spark):
     atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
     spark.sparkContext.setCheckpointDir(ckpt)
     knnmod._WARNED_CKPT_CLEANUP.clear()
+    # only the round route checkpoints; the broadcast route has none
     with warnings.catch_warnings():
         warnings.simplefilter("error", RuntimeWarning)
-        a = sorted(tuple(r) for r in
-                   knn_join(spark, small, big, k=2, validate=False).collect())
-        b = sorted(tuple(r) for r in
-                   knn_join(spark, small, big, k=2, validate=False).collect())
+        a = sorted(tuple(r) for r in knn_join(
+            spark, small, big, k=2, validate=False, broadcast=False).collect())
+        b = sorted(tuple(r) for r in knn_join(
+            spark, small, big, k=2, validate=False, broadcast=False).collect())
     assert a == b and len(a) == 40
 
 
@@ -95,10 +113,12 @@ def test_knn_mixed_kinds(spark):
         y1, y2 = sorted((rng.uniform(-5, 5), rng.uniform(-5, 5)))
         small_rows.append((RECT, [x1, y1, x2, y2]))
     big_rows = [(POINT, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for _ in range(12)]
-    got = knn_join(spark, geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows), k=2)
-    got = sorted((r.big_id, r.small_id, r.rank) for r in got.collect())
     want = _brute_knn(small_rows, big_rows, 2)
-    assert got == [(w[0], w[1], w[3]) for w in want]
+    for broadcast in (True, False):  # both routes against the oracle
+        got = knn_join(spark, geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows),
+                       k=2, broadcast=broadcast)
+        got = sorted((r.big_id, r.small_id, r.rank) for r in got.collect())
+        assert got == [(w[0], w[1], w[3]) for w in want], broadcast
 
 
 def test_index_method_knn_matches_module_fn(spark):
@@ -120,8 +140,8 @@ def test_index_method_knn_matches_module_fn(spark):
 
 
 def test_knn_max_rounds_exhaustion_raises(spark):
-    """Exhausting max_rounds with probes still pending (and no broadcast
-    sweep available) must raise, not return incomplete top-k quietly."""
+    """Exhausting max_rounds with probes still pending on the round
+    route must raise, not return incomplete top-k quietly."""
     rng = random.Random(41)
     small_rows = [(POINT, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for _ in range(40)]
     big_rows = [(POINT, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for _ in range(8)]
@@ -149,7 +169,7 @@ def _assert_knn_exact(got, want):
 
 @pytest.mark.parametrize("big_kinds", [None, {POINT}])
 def test_knn_multi_round_escalation_exact(spark, caplog, big_kinds):
-    """Ring escalation without the broadcast sweep, on integer-grid
+    """Ring escalation on the round route, on integer-grid
     points (cell size exactly 1, so round 1's bound is exactly 1.0).
     Probe (3, 4) has its two nearest sites tied at distance 1.0, ON the
     bound: the strict done-test keeps it pending after round 1. Probe
@@ -169,32 +189,188 @@ def test_knn_multi_round_escalation_exact(spark, caplog, big_kinds):
     rounds = [m for m in caplog.messages if m.startswith("knn round=")]
     pending = [int(re.search(r"pending=(\d+)", m).group(1)) for m in rounds]
     assert pending == [len(big_rows), 2, 0], rounds
-    assert not any(m.startswith("knn sweep") for m in caplog.messages)
+    assert _knn_route(caplog) == "rounds"
     _assert_knn_exact(got, _brute_knn(small_rows, big_rows, 2))
 
 
-def test_knn_geometry_broadcast_collected_only_for_sweep(spark):
-    """The all-point ring route computes distances in SQL: a call that
-    ends without the straggler sweep must leave the index's geometry
-    broadcast uncollected; one that sweeps collects it and stays exact."""
+def test_knn_broadcast_route_is_one_local_pass(spark, caplog):
+    """On a broadcast index the whole ring search is one mapInArrow over
+    the probe side: the call runs at most one Spark job (the Arrow
+    collect of the geometry broadcast) and a second call on the same
+    index none; results stay exact for probes far outside the extent,
+    ties exactly on a ring bound (integer grid, cell size 1), k larger
+    than the small side, rect smalls and an empty probe side; a far
+    probe on a res-14 grid finishes promptly."""
+    import logging
+    import time
+
     from spatialjoin.index import SpatialIndex
 
-    small_rows = [(POINT, [float(x), float(y)]) for x in range(16) for y in range(16)]
-    small = geoms_to_df(spark, small_rows)
-    inside = [(POINT, [x + 0.5, y + 0.25]) for x, y in ((1, 2), (7, 7), (14, 3), (9, 12))]
+    caplog.set_level(logging.DEBUG, logger="spatialjoin.knn")
+    sc = spark.sparkContext
+    small_rows = [(POINT, [float(x), float(y)]) for x in range(1, 14, 2) for y in range(1, 14, 2)]
+    probes = [(POINT, [3.0, 4.0]), (POINT, [4.0, 4.0]), (POINT, [7.0, 7.0]),
+              (POINT, [0.0, 13.0]), (POINT, [100.0, 100.0]), (POINT, [-40.0, 6.0]),
+              (POINT, [1e9, -1e9])]
+    small, big = geoms_to_df(spark, small_rows), geoms_to_df(spark, probes)
     idx = SpatialIndex.build(spark, small, extent=(0.0, 0.0, 16.0, 16.0), resolution=4,
                              validate=False)
     assert idx.broadcast_small
-    got = idx.knn_join(geoms_to_df(spark, inside), 3, validate=False,
-                       initial_ring=2, big_kinds={POINT})
-    _assert_knn_exact(got, _brute_knn(small_rows, inside, 3))
-    assert idx._small_geo_bc_val is None
-    far = inside + [(POINT, [60.0, -20.0])]  # pending after round 1: swept
-    got = idx.knn_join(geoms_to_df(spark, far), 3, validate=False,
-                       initial_ring=1, big_kinds={POINT})
-    _assert_knn_exact(got, _brute_knn(small_rows, far, 3))
-    assert idx._small_geo_bc_val is not None
+    jobs = []
+    for _ in range(2):
+        caplog.clear()
+        sc.setJobGroup("knn-local-pass", "knn_join call")
+        try:
+            got = idx.knn_join(big, 2, validate=False, initial_ring=1, big_kinds={POINT})
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs.append(len(sc.statusTracker().getJobIdsForGroup("knn-local-pass")))
+        assert _knn_route(caplog) == "broadcast-local"
+    assert jobs[0] <= 1 and jobs[1] == jobs[0], jobs
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("MapInArrow") == 1, plan
+    _assert_knn_exact(got, _brute_knn(small_rows, probes, 2))
+    # general (non-point) probe path, same index
+    _assert_knn_exact(idx.knn_join(big, 3, validate=False),
+                      _brute_knn(small_rows, probes, 3))
+    assert idx.knn_join(big.limit(0), 2, validate=False).collect() == []
     idx.unpersist()
+
+    two = [(POINT, [0.0, 0.0]), (POINT, [1.0, 0.0])]
+    got = knn_join(spark, geoms_to_df(spark, two), big, k=5, broadcast=True)
+    _assert_knn_exact(got, _brute_knn(two, probes, 5))
+
+    rects = [(RECT, [float(x), float(y), x + 1.5, y + 0.5]) for x in range(0, 12, 3)
+             for y in range(0, 12, 4)]
+    got = knn_join(spark, geoms_to_df(spark, rects), big, k=3, broadcast=True)
+    _assert_knn_exact(got, _brute_knn(rects, probes, 3))
+
+    far = [(POINT, [5e6, 5e6])]
+    idx = SpatialIndex.build(spark, small, extent=(0.0, 0.0, 16.0, 16.0), resolution=14,
+                             validate=False)
+    t0 = time.perf_counter()
+    got = idx.knn_join(geoms_to_df(spark, far), 3, validate=False, initial_ring=1,
+                       big_kinds={POINT})
+    _assert_knn_exact(got, _brute_knn(small_rows, far, 3))
+    assert time.perf_counter() - t0 < 60.0
+    idx.unpersist()
+
+
+@pytest.mark.parametrize("broadcast", [True, False])
+def test_knn_multilevel_index_exact(spark, caplog, broadcast):
+    """kNN on a multilevel index finds small geometries stored on every
+    level: the round route probes each populated level's parent cells
+    of the ring block, the broadcast route keys the geometry itself."""
+    import logging
+
+    from spatialjoin.index import SpatialIndex
+
+    rng = random.Random(53)
+    small_rows = []
+    for _ in range(40):
+        x, y = rng.uniform(0, 99), rng.uniform(0, 99)
+        small_rows.append((RECT, [x, y, x + 0.5, y + 0.5]))
+    for _ in range(6):
+        x, y = rng.uniform(0, 60), rng.uniform(0, 60)
+        small_rows.append((RECT, [x, y, x + 40.0, y + 40.0]))
+    big_rows = [(POINT, [rng.uniform(0, 100), rng.uniform(0, 100)]) for _ in range(30)]
+    idx = SpatialIndex.build(spark, geoms_to_df(spark, small_rows), extent=(0.0, 0.0, 100.0, 100.0),
+                             resolution=5, broadcast=broadcast, multilevel=True)
+    assert idx.levels == [2, 5] and idx.broadcast_small == broadcast
+    caplog.set_level(logging.DEBUG, logger="spatialjoin.knn")
+    got = idx.knn_join(geoms_to_df(spark, big_rows), 3)
+    assert _knn_route(caplog) == ("broadcast-local" if broadcast else "rounds")
+    _assert_knn_exact(got, _brute_knn(small_rows, big_rows, 3))
+    idx.unpersist()
+
+
+@pytest.mark.parametrize("budget,span", [(4_000_000, 8), (5, 1)])
+def test_local_knn_task_matches_brute_force(monkeypatch, budget, span):
+    """The broadcast route's task function, called directly (no Spark):
+    with tiny pair budgets and key spans the gathers run in many chunks,
+    wide geometries are keyed at coarser levels and multi-key
+    candidates are deduped — all exact for mixed kinds on both sides
+    and a probe far outside the extent."""
+    import pyarrow as pa
+
+    from spatialjoin import knn as knnmod
+    from spatialjoin.geom import LINESTRING, TRIANGLE
+    from spatialjoin.grid import Grid
+
+    monkeypatch.setattr(knnmod, "_PAIR_BUDGET", budget)
+    monkeypatch.setattr(knnmod, "_KEY_SPAN", span)
+    rng = random.Random(61)
+
+    def pt():
+        return [rng.uniform(0, 60), rng.uniform(0, 60)]
+
+    small_rows = [(POINT, pt()) for _ in range(30)]
+    small_rows += [(RECT, [x, y, x + rng.uniform(0, 30), y + rng.uniform(0, 3)])
+                   for x, y in (pt() for _ in range(10))]
+    small_rows += [(LINESTRING, pt() + pt() + pt()) for _ in range(5)]
+    small_rows += [(POLYGON, [x, y, x + 4, y, x + 2, y + 5, x, y], [0])
+                   for x, y in (pt() for _ in range(5))]
+    points = [(POINT, pt()) for _ in range(20)] + [(POINT, [500.0, -300.0])]
+    probes = points + [(TRIANGLE, pt() + pt() + pt()) for _ in range(4)]
+    probes += [(POLYGON, [x, y, x + 1, y, x + 1, y + 1, x, y], [0])
+               for x, y in (pt() for _ in range(3))]
+
+    class Broadcast:
+        value = (np.arange(len(small_rows), dtype=np.int64),
+                 GeomBatch.from_lists([r[0] for r in small_rows], [r[1] for r in small_rows],
+                                      [r[2] if len(r) > 2 else None for r in small_rows]))
+
+    def run(batch, k, point_probe):
+        fn = knnmod._local_knn(Broadcast, Grid((0.0, 0.0, 100.0, 100.0)), 4, k, 1, point_probe)
+        return sorted(row for b in fn(iter([batch]))
+                      for row in zip(*(b.column(i).to_pylist() for i in (0, 1, 3, 2))))
+
+    for k in (1, 4):
+        general = pa.RecordBatch.from_arrays([
+            pa.array(range(len(probes)), pa.int64()),
+            pa.array([r[0] for r in probes], pa.int32()),
+            pa.array([r[1] for r in probes], pa.list_(pa.float64())),
+            pa.array([r[2] if len(r) > 2 else [] for r in probes], pa.list_(pa.int32())),
+        ], names=["big_id", "b_kind", "b_coords", "b_rings"])
+        slim = pa.RecordBatch.from_arrays([
+            pa.array(range(len(points)), pa.int64()),
+            pa.array([r[1][0] for r in points]), pa.array([r[1][1] for r in points]),
+        ], names=["big_id", "bx", "by"])
+        for batch, rows, point_probe in ((general, probes, False), (slim, points, True)):
+            want = [(b, s, r, d) for b, s, d, r in _brute_knn(small_rows, rows, k)]
+            assert run(batch, k, point_probe) == want, (k, point_probe)
+
+
+def test_udf_workers_import_package_outside_repo(tmp_path):
+    """A driver started outside the repo root, with only ``sys.path``
+    patched, still runs Python UDFs: get_spark puts the package on the
+    workers' PYTHONPATH for every master."""
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = tmp_path / "knn_outside.py"
+    script.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from spatialjoin.knn import knn_join
+        from spatialjoin.sparkutil import geoms_to_df, get_spark
+
+        spark = get_spark(cpus=1)
+        small = geoms_to_df(spark, [(0, [0.0, 0.0]), (0, [1.0, 0.0]), (0, [5.0, 5.0])])
+        big = geoms_to_df(spark, [(0, [0.9, 0.1])])
+        out = knn_join(spark, small, big, k=2, broadcast=True, big_kinds={{0}})
+        print("ROWS", sorted((r.small_id, r.rank) for r in out.collect()))
+        spark.stop()
+    """))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_DRIVER_MEM"] = "1g"
+    proc = subprocess.run([sys.executable, str(script)], cwd=tmp_path, env=env,
+                          capture_output=True, text=True, timeout=600)
+    assert proc.returncode == 0, proc.stderr[-4000:]
+    assert "ROWS [(0, 2), (1, 1)]" in proc.stdout, proc.stdout
 
 
 # -- tiles --------------------------------------------------------------------

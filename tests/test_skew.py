@@ -86,13 +86,16 @@ def test_knn_hot_split_invariance(spark):
     idx_probe = SpatialIndex.build(spark, small, validate=False, hot_threshold=30)
     assert idx_probe.hot_cells is not None, "expected hot cells on this corpus"
     idx_probe.unpersist()
-    got = sorted(
-        (r.big_id, r.small_id, r.distance, r.rank)
-        for r in knn_join(spark, small, big, k=3, validate=False,
-                          hot_threshold=30, big_kinds={POINT}).collect()
-    )
-    assert got == base
-    assert len({b for b, *_ in got}) == len(big_rows) and len(got) == 3 * len(big_rows)
+    # the round route probes the hot split's fine level; the broadcast
+    # route reads the geometry broadcast and must agree too
+    for broadcast in (False, True):
+        got = sorted(
+            (r.big_id, r.small_id, r.distance, r.rank)
+            for r in knn_join(spark, small, big, k=3, validate=False, broadcast=broadcast,
+                              hot_threshold=30, big_kinds={POINT}).collect()
+        )
+        assert got == base, broadcast
+        assert len({b for b, *_ in got}) == len(big_rows) and len(got) == 3 * len(big_rows)
 
 
 def test_cogroup_strategy_matches_pairs(spark):
