@@ -23,8 +23,8 @@ from spatialjoin import queries as Q  # noqa: E402
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: point-in-polygon spatial join (supplier quads contain
     customer points) through the full engine — JVM cell covering +
-    broadcast cell equi-join + reference-point dedup + vectorized
-    mapInPandas refine."""
+    broadcast cell equi-join + reference-point dedup + the unrolled
+    JVM point-in-polygon refine (the quads share one vertex count)."""
     return Q.q_pip_quad_contains(spark, "/root/testdata/sf0.001")
 
 

@@ -24,6 +24,9 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
 
+# the sf0.1 tables this one borrows from (embedding dim, small tables)
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
 
 def main() -> None:
     out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sfbig"
@@ -82,7 +85,7 @@ def main() -> None:
             + rng.integers(0, 2500, n_li) * np.timedelta64(86400_000_000, "us")),
     }))
     # embeddings at the sf0.1 dim (bench.py computes ANN recalls)
-    ref = pq.read_table("/root/testdata/sf0.1/embeddings.parquet")
+    ref = pq.read_table(f"{SF_DIR}/embeddings.parquet")
     dim = len(ref["embedding"][0])
     n_emb = 20_000
     emb = rng.standard_normal((n_emb, dim)).astype(np.float32)
@@ -95,7 +98,7 @@ def main() -> None:
     for t in ["nation", "region", "orders", "events", "documents"]:
         dst = f"{out}/{t}.parquet"
         if not os.path.exists(dst):
-            os.symlink(f"/root/testdata/sf0.1/{t}.parquet", dst)
+            os.symlink(f"{SF_DIR}/{t}.parquet", dst)
     print("done; embedding dim =", dim)
 
 

@@ -21,11 +21,10 @@ REP = int(os.environ.get("PROFILE_REP", "128"))
 
 
 def worker(cpus: int) -> None:
-    import numpy as np
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    from spatialjoin.index import SpatialIndex, _refine_input_cols, _refine_sides
+    from spatialjoin.index import SpatialIndex, _arrow_refine, _refine_input_cols
     from spatialjoin import kernels
     from spatialjoin.queries import _points_df, _quads_df
     from spatialjoin.sparkutil import get_spark
@@ -46,9 +45,9 @@ def worker(cpus: int) -> None:
     quads = _quads_df(spark, SF_DIR, "supplier", "s_suppkey")
     idx = SpatialIndex.build(spark, quads, validate=False)
 
-    cand = idx._candidates(probe, validate=False)
+    cand = idx._candidates(probe, validate=False, probe_kind="point")
     bc = idx.small_geo_bc
-    sel = cand.select(*_refine_input_cols(bc, [], point_probe=True))
+    sel = cand.select(*_refine_input_cols(bc, [], slim="point"))
 
     pass_schema = T.StructType(
         [
@@ -60,15 +59,6 @@ def worker(cpus: int) -> None:
     def passthrough(it):
         for pdf in it:
             yield pdf.loc[:, ["big_id", "small_id"]]
-
-    def full(it):
-        for pdf in it:
-            if len(pdf) == 0:
-                continue
-            A, ai, B = _refine_sides(pdf, bc)
-            bi = np.arange(len(pdf), dtype=np.int64)
-            mask = kernels.contains(A, ai, B, bi)
-            yield pdf.loc[mask, ["big_id", "small_id"]]
 
     import pyarrow as pa
 
@@ -136,7 +126,8 @@ def worker(cpus: int) -> None:
         ("arrow_passthrough", lambda: sel.mapInPandas(passthrough, pass_schema)),
         ("arrow_pass_mapinarrow", lambda: sel.mapInArrow(pass_arrow, pass_schema)),
         ("arrow_in_only", lambda: sel.mapInPandas(in_only, pass_schema)),
-        ("full_refine", lambda: sel.mapInPandas(full, pass_schema)),
+        ("full_refine", lambda: sel.mapInArrow(
+            _arrow_refine("join", how="contains", slim="point", bc=bc), pass_schema)),
         ("pyjoin_bcast_probe", lambda: probe_sel.mapInArrow(pyjoin, pass_schema)),
     ]
     for _, fn in jobs:

@@ -14,9 +14,20 @@ Spark-first re-expression of the reference crate's two operators
               standard reference-point rule keeps a pair only in the
               cell containing the top-left corner of the two bboxes'
               intersection — a pure-SQL filter, no shuffle.
-    refine  — exact predicate via the vectorized numpy kernels inside
-              ``mapInPandas`` (Arrow batches; no per-row Python),
-              mirroring src/index.rs:505-533 semantics.
+    refine  — the exact predicate (src/index.rs:505-533 semantics)
+              along one of three routes, chosen per call by
+              ``SpatialIndex._plan`` from the build stats alone:
+              ``jvm`` — a JVM predicate on the deduped pairs (rect/point
+              bbox logic, the unrolled point-in-polygon ray cast, or the
+              point-point distance), no Python operator; ``arrow`` —
+              one ``mapInArrow`` pass of the vectorized numpy kernels
+              over the deduped pairs (``_arrow_refine``; the small
+              geometry comes from a broadcast or rides with each pair);
+              ``cogroup`` — both sides grouped by cell and filtered,
+              deduped and refined per group in one ``applyInArrow``
+              (forced, or with_geos on a non-broadcast index). Each call
+              logs its route and the reason at DEBUG on the
+              ``spatialjoin.index`` logger.
 
 ``max_distance`` buffering of the indexed side's bboxes replicates
 cheap_buffer (src/rtrees.rs:159-166): the epsilon of the distance join
@@ -27,10 +38,13 @@ Join semantics (MUST match the reference, src/index.rs:505-533):
   how='contains'   : small contains big
   how='within'     : small within big  (= big contains small)
 Proximity predicate is inclusive: distance <= max_distance
-(src/index.rs:438); distances asserted finite (src/index.rs:436).
+(src/index.rs:438); distances checked finite (src/index.rs:436).
 """
 
 from __future__ import annotations
+
+import logging
+from functools import reduce
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
@@ -49,6 +63,8 @@ BROADCAST_MAX_CELLS = 2_000_000
 BROADCAST_BYTE_BUDGET = 128 * 1024 * 1024
 
 _GEO_COLS = ("kind", "coords", "rings")
+
+_log = logging.getLogger(__name__)
 
 
 def _prefixed(df: DataFrame, prefix: str, id_out: str) -> DataFrame:
@@ -229,26 +245,13 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     return df
 
 
-def _build_batches(pdf):
-    A = GeomBatch.from_columns(
-        pdf["s_kind"].to_numpy(), pdf["s_coords"].to_list(), pdf["s_rings"].to_list()
-    )
-    B = GeomBatch.from_columns(
-        pdf["b_kind"].to_numpy(), pdf["b_coords"].to_list(), pdf["b_rings"].to_list()
-    )
-    return A, B
-
-
-def _refine_input_cols(bc, extra, point_probe: bool = False,
-                       slim: str | None = None):
+def _refine_input_cols(bc, extra, slim: str | None = None):
     """Only the columns the refine kernel reads cross the (expensive)
     row->Arrow boundary: ids + probe geometry (+ carried small geometry
     when there is no broadcast; + with_geos passthroughs). All-point
     probes decompose to two scalar doubles — cheaper through the Arrow
     writer than a 2-element array; all-rect probes to the four bbox
     doubles (the bbox IS the rect bit-exactly at buffer zero)."""
-    if slim is None and point_probe:
-        slim = "point"
     if slim == "point":
         # probe bbox is unbuffered, so b_xmin/b_ymin ARE the point
         # coordinates bit-exactly (x - 0.0 == x) — using them lets
@@ -320,6 +323,20 @@ def _point_batch(px, py):
     )
 
 
+def _probe_kind(big_kinds) -> str | None:
+    """"point" or "rect" when the probe side holds only that kind (its
+    bbox is then read as scalars, and its geometry can cross the Arrow
+    boundary as them), else None."""
+    from .geom import POINT, RECT
+
+    kinds = set(big_kinds or ())
+    if kinds == {POINT}:
+        return "point"
+    if kinds == {RECT}:
+        return "rect"
+    return None
+
+
 def _slim_probe_batch(col, slim):
     """Rebuild the probe GeomBatch from slim scalar columns: two doubles
     for points, the four bbox doubles for rects (bit-exact at buffer
@@ -345,24 +362,27 @@ def _slim_probe_batch(col, slim):
     )
 
 
-def _arrow_point_refine(bc, mode, how=None, max_d=None, slim="point",
-                        carry=()):
-    """mapInArrow refine for slim (point/rect) probes with a broadcast
-    small side: primitive columns cross the boundary as raw Arrow
-    buffers with no pandas materialization on either side (measured:
-    the pandas conversion is a large share of the exchange cost and
-    scales worse than the buffers themselves).
+def _arrow_refine(op, how=None, max_d=None, slim=None, bc=None, carry=()):
+    """The engine's one pair refine, a ``mapInArrow`` function: Arrow
+    batches of candidate pairs in, the surviving (big_id, small_id
+    [, distance]) rows out, with no pandas on either side.
 
-    ``carry``: extra input column names passed through to matching
-    output rows unchanged (type-preserving Arrow filter) — lets a
-    STREAMING caller keep its payload through the refine, where a
-    post-refine stream-stream re-join would be unsupported."""
+    The probe geometry comes from the slim scalars or the carried
+    b_kind/b_coords/b_rings (``_slim_probe_batch``). The small geometry
+    comes from ``bc``, the (sorted_ids, GeomBatch) broadcast looked up
+    by small_id, or, without one, from the carried s_kind/s_coords/
+    s_rings decoded as flat buffers. ``carry`` names input columns
+    passed through to the surviving rows unchanged (a type-preserving
+    Arrow filter): the with_geos geometry columns, or a streaming
+    caller's payload."""
 
     def fn(it):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
-        ids_geo, A = bc.value
+        if carry:
+            import pyarrow.compute as pc
+        if bc is not None:
+            ids_geo, A = bc.value
         for batch in it:
             n = batch.num_rows
             if n == 0:
@@ -371,9 +391,16 @@ def _arrow_point_refine(bc, mode, how=None, max_d=None, slim="point",
             bid = col["big_id"].to_numpy(zero_copy_only=False)
             sid = col["small_id"].to_numpy(zero_copy_only=False)
             B = _slim_probe_batch(col, slim)
-            ai = np.searchsorted(ids_geo, sid)
             bi = np.arange(n, dtype=np.int64)
-            if mode == "join":
+            if bc is None:
+                A = GeomBatch.from_arrow(
+                    col["s_kind"].to_numpy(zero_copy_only=False),
+                    col["s_coords"], col["s_rings"],
+                )
+                ai = bi
+            else:
+                ai = np.searchsorted(ids_geo, sid)
+            if op == "join":
                 if how == "intersects":
                     mask = kernels.intersects(A, ai, B, bi)
                 elif how == "contains":
@@ -389,85 +416,14 @@ def _arrow_point_refine(bc, mode, how=None, max_d=None, slim="point",
                 arrays = [pa.array(bid[mask]), pa.array(sid[mask]),
                           pa.array(d[mask])]
                 names = ["big_id", "small_id", "distance"]
-            pamask = pa.array(mask)
-            for nm in carry:
-                arrays.append(pc.filter(col[nm], pamask))
-                names.append(nm)
+            if carry:
+                pamask = pa.array(mask)
+                for nm in carry:
+                    arrays.append(pc.filter(col[nm], pamask))
+                    names.append(nm)
             yield pa.RecordBatch.from_arrays(arrays, names=names)
 
     return fn
-
-
-def _arrow_pair_refine(mode, how=None, max_d=None, slim="point"):
-    """mapInArrow refine for slim (point/rect) probes when the small
-    side is NOT broadcast: candidate pairs arrive from a pure-JVM
-    shuffle equi-join on cell CARRYING the small geometry columns per
-    pair, the kernels refine, and only (big_id, small_id[, distance])
-    leave. This replaces the cogroup route for these workloads: the
-    per-pair Arrow bytes grow by the small geometry (~100 B for a
-    quad), but the exchange is ONE contiguous mapInArrow stream — no
-    per-group sort, no dual grouped Arrow streams, no per-group fn
-    invocation, which BENCH/COGROUP.md measured as the machinery whose
-    per-core cost inflates 2.8x when every core is busy. Same
-    N-to-4N shape as the broadcast fast path, which scales."""
-
-    def fn(it):
-        import pyarrow as pa
-
-        for batch in it:
-            n = batch.num_rows
-            if n == 0:
-                continue
-            col = {nm: batch.column(i) for i, nm in enumerate(batch.schema.names)}
-            bid = col["big_id"].to_numpy(zero_copy_only=False)
-            sid = col["small_id"].to_numpy(zero_copy_only=False)
-            B = _slim_probe_batch(col, slim)
-            A = GeomBatch.from_arrow(
-                col["s_kind"].to_numpy(zero_copy_only=False),
-                col["s_coords"], col["s_rings"],
-            )
-            bi = np.arange(n, dtype=np.int64)
-            if mode == "join":
-                if how == "intersects":
-                    mask = kernels.intersects(A, bi, B, bi)
-                elif how == "contains":
-                    mask = kernels.contains(A, bi, B, bi)
-                else:  # within: big contains small (src/index.rs:528-533)
-                    mask = kernels.contains(B, bi, A, bi)
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(bid[mask]), pa.array(sid[mask])],
-                    names=["big_id", "small_id"],
-                )
-            else:
-                d = kernels.distance(A, bi, B, bi)
-                _check_finite(d)
-                mask = d <= max_d
-                yield pa.RecordBatch.from_arrays(
-                    [pa.array(bid[mask]), pa.array(sid[mask]), pa.array(d[mask])],
-                    names=["big_id", "small_id", "distance"],
-                )
-
-    return fn
-
-
-def _refine_sides(pdf, small_geo_bc):
-    """(A, ai, B) for a candidate batch: the small side comes from the
-    broadcast GeomBatch (looked up by id) when available, else from the
-    carried columns; all-point probes arrive as scalar bx/by."""
-    if "bx" in pdf.columns:
-        B = _point_batch(pdf["bx"].to_numpy(), pdf["by"].to_numpy())
-    else:
-        B = GeomBatch.from_columns(
-            pdf["b_kind"].to_numpy(), pdf["b_coords"].to_list(), pdf["b_rings"].to_list()
-        )
-    if small_geo_bc is not None:
-        ids, A = small_geo_bc.value
-        ai = np.searchsorted(ids, pdf["small_id"].to_numpy())
-        return A, ai, B
-    A = GeomBatch.from_columns(
-        pdf["s_kind"].to_numpy(), pdf["s_coords"].to_list(), pdf["s_rings"].to_list()
-    )
-    return A, np.arange(len(pdf), dtype=np.int64), B
 
 
 class SpatialIndex:
@@ -485,7 +441,6 @@ class SpatialIndex:
                  hot_cells: DataFrame | None = None,
                  small_fine: DataFrame | None = None,
                  fine_resolution: int | None = None,
-                 small_geo_bc=None,
                  levels: list | None = None):
         self.spark = spark
         self.small_cells = small_cells  # cold cells (all cells when no split)
@@ -504,14 +459,18 @@ class SpatialIndex:
         # build records the source frame and the collect job + driver
         # broadcast happen on first ACCESS, so pure-SQL refine paths
         # (rect/point predicates, unrolled PIP) never pay for it.
-        self._small_geo_bc_val = small_geo_bc
+        self._small_geo_bc_val = None
         self._small_geo_src = None
         # multilevel (size-stratified) index: populated LEVELS the probe
         # side must cover (None = single-resolution index)
         self.levels = levels
-        # geometry-row count from the build stats job (set by build,
-        # the only constructor of an index)
+        # from the build stats job (set by build, the only constructor
+        # of an index): geometry-row count, kind set, max ring count and
+        # the per-geometry coordinate count when it is uniform (else None)
         self.n_small_rows = None
+        self.small_kinds = None
+        self.small_max_rings = None
+        self.small_uniform_size = None
 
     @property
     def small_geo_bc(self):
@@ -723,88 +682,86 @@ class SpatialIndex:
         idx = SpatialIndex(
             spark, small_cells, grid, resolution, max_distance, bool(bc),
             hot_cells=hot, small_fine=small_fine, fine_resolution=fine_res,
-            small_geo_bc=None, levels=levels,
+            levels=levels,
         )
         if bc:
             # defer the geometry collect + broadcast to first use
             idx._small_geo_src = s.select("small_id", "s_kind",
                                           "s_coords", "s_rings")
         # cache build-time stats on the index: later calls (kNN ring
-        # sizing, SQL fast-path dispatch) would otherwise re-derive each
-        # with its own driver action
+        # sizing, route planning) would otherwise re-derive each with
+        # its own driver action
         idx.n_small_rows = n_small
-        idx._small_kinds_cache = small_kinds
-        idx._small_max_rings = small_max_rings
-        idx._small_uniform_size = small_uniform_size
+        idx.small_kinds = small_kinds
+        idx.small_max_rings = small_max_rings
+        idx.small_uniform_size = small_uniform_size
         return idx
 
     # -- operators -----------------------------------------------------------
 
-    def _ref_filter(self, cand: DataFrame, res: int) -> DataFrame:
+    def _ref_filter(self, cand: DataFrame, res: int | None) -> DataFrame:
         """Reference-point dedup + bbox-intersection prune (pure SQL):
         keep a candidate pair only in the cell containing the top-left
-        corner of the two bboxes' intersection."""
+        corner of the two bboxes' intersection. ``res=None`` (multilevel
+        index) decodes the resolution per row from the cell id."""
         rx = F.greatest("s_xmin", "b_xmin")
         ry = F.greatest("s_ymin", "b_ymin")
         bbox_ok = (rx <= F.least("s_xmax", "b_xmax")) & (ry <= F.least("s_ymax", "b_ymax"))
-        n = 1 << res
-        cw, ch = self.grid.cell_size(res)
-        ref_cx = _clamped_cell_coord(rx, self.grid.x0, cw, n)
-        ref_cy = _clamped_cell_coord(ry, self.grid.y0, ch, n)
+        if res is None:
+            n = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(shiftright(cell, 58) AS INT))")
+            cw = F.lit(float(self.grid.x1 - self.grid.x0)) / n
+            ch = F.lit(float(self.grid.y1 - self.grid.y0)) / n
+            ref_cx = _clamped_cell_coord_col(rx, self.grid.x0, cw, n)
+            ref_cy = _clamped_cell_coord_col(ry, self.grid.y0, ch, n)
+        else:
+            n = 1 << res
+            cw, ch = self.grid.cell_size(res)
+            ref_cx = _clamped_cell_coord(rx, self.grid.x0, cw, n)
+            ref_cy = _clamped_cell_coord(ry, self.grid.y0, ch, n)
         return cand.where(bbox_ok & (F.col("cx") == ref_cx) & (F.col("cy") == ref_cy))
 
-    def _ref_filter_ml(self, cand: DataFrame) -> DataFrame:
-        """Reference-point dedup with the resolution decoded PER ROW
-        from the cell id (multilevel indexes)."""
-        rx = F.greatest("s_xmin", "b_xmin")
-        ry = F.greatest("s_ymin", "b_ymin")
-        bbox_ok = (rx <= F.least("s_xmax", "b_xmax")) & (ry <= F.least("s_ymax", "b_ymax"))
-        n = F.expr("shiftleft(CAST(1 AS BIGINT), CAST(shiftright(cell, 58) AS INT))")
-        cw = F.lit(float(self.grid.x1 - self.grid.x0)) / n
-        ch = F.lit(float(self.grid.y1 - self.grid.y0)) / n
-        ref_cx = _clamped_cell_coord_col(rx, self.grid.x0, cw, n)
-        ref_cy = _clamped_cell_coord_col(ry, self.grid.y0, ch, n)
-        return cand.where(bbox_ok & (F.col("cx") == ref_cx) & (F.col("cy") == ref_cy))
-
-    def _probe_cells_ml(self, b: DataFrame) -> DataFrame:
-        """Probe covering over every populated level of a multilevel
-        index — one explode over the (few) level literals, then the
-        per-row-level covering; all JVM column math."""
-        b = b.withColumn(
-            "__lvl",
-            F.explode(F.array(*[F.lit(int(l)).cast("long") for l in self.levels])),
-        )
-        b = with_cells_at_level(b, "b", self.grid, F.col("__lvl"), keep_cxy=True)
-        return b.drop("__lvl")
-
-    def _probe_cells(self, big_df: DataFrame, validate: bool,
-                     point_probe: bool = False,
-                     rect_probe: bool = False) -> DataFrame:
-        """Probe-side covering across all index levels (cold + fine)."""
+    def _probe_levels(self, big_df: DataFrame, validate: bool,
+                      probe_kind: str | None) -> list:
+        """The probe side every route starts from: validate, prefix,
+        spread over the cluster, bbox (scalar reads for all-point or
+        all-rect probes), then the covering of each index level as
+        (probe cells, small cells, resolution) triples. A multilevel
+        index is one triple over every populated level (resolution None:
+        cell ids carry their level); a hot split is two, cold cells at
+        the base resolution and hot cells at the fine one (within the
+        hot parent only). A pair's reference point picks exactly one
+        level, so the levels' candidates never overlap."""
         if validate:
             validate_geoms(big_df)
         b = _prefixed(big_df, "b", "big_id")
         b = ensure_parallelism(b)
-        b = with_bbox(b, "b", buffer=0.0, points=point_probe, rects=rect_probe)
+        b = with_bbox(b, "b", buffer=0.0, points=probe_kind == "point",
+                      rects=probe_kind == "rect")
         if self.levels is not None:
-            return self._probe_cells_ml(b)
+            b = b.withColumn(
+                "__lvl",
+                F.explode(F.array(*[F.lit(int(l)).cast("long") for l in self.levels])),
+            )
+            b = with_cells_at_level(b, "b", self.grid, F.col("__lvl"), keep_cxy=True)
+            return [(b.drop("__lvl"), self.small_cells, None)]
         b = with_cells(b, "b", self.grid, self.resolution, keep_cxy=True)
         if self.hot_cells is None:
-            return b
+            return [(b, self.small_cells, self.resolution)]
         b_cold = b.join(F.broadcast(self.hot_cells), "cell", "left_anti")
         b_hot = b.join(F.broadcast(self.hot_cells), "cell", "left_semi")
         b_fine = with_fine_cells(b_hot, "b", self.grid, self.resolution, self.fine_resolution)
-        return b_cold.unionByName(b_fine)
+        return [(b_cold, self.small_cells, self.resolution),
+                (b_fine, self.small_fine, self.fine_resolution)]
 
     def _cogroup_refine(self, big_df: DataFrame, validate: bool, op: str,
-                        how: str | None = None, with_geos: bool = False,
-                        big_kinds=None) -> DataFrame:
+                        how: str | None, with_geos: bool,
+                        probe_kind: str | None) -> DataFrame:
         """Shuffle-side execution for non-broadcastable indexes: cogroup
         both sides by cell and, per cell group, bulk-load a packed
         STRtree over the small side's (buffered) bboxes, probe with the
         big side's bboxes, dedup with the reference-point rule, and
         refine with the vectorized kernels — all inside one
-        applyInPandas. Each input row crosses the Arrow boundary once
+        applyInArrow. Each input row crosses the Arrow boundary once
         per covering cell instead of once per CANDIDATE PAIR, which is
         the difference that matters when cells are dense. ``with_geos``
         emits both geometries per RESULT row (like the reference's
@@ -840,13 +797,7 @@ class SpatialIndex:
         from .geom import POINT as KP, RECT as KR
         from .strtree import STRtree
 
-        slim = None
-        if not with_geos and big_kinds is not None:
-            bk = set(big_kinds)
-            if bk == {KP}:
-                slim = "point"
-            elif bk == {KR}:
-                slim = "rect"
+        slim = None if with_geos else probe_kind
         # r6: rect/point-vs-rect/point predicates are pure bbox logic
         # (same equivalence argument as _sql_predicate: candidates
         # already bbox-overlap, so Intersects degenerates to TRUE and
@@ -857,13 +808,11 @@ class SpatialIndex:
         bbox_only = (
             op == "join" and not with_geos and slim is not None
             and self.max_distance == 0.0
-            and self._small_kinds() <= {KP, KR}
+            and self.small_kinds <= {KP, KR}
         )
-        b = self._probe_cells(big_df, validate, point_probe=slim == "point",
-                              rect_probe=slim == "rect")
-        small = self.small_cells
-        if self.small_fine is not None:
-            small = small.unionByName(self.small_fine)
+        parts = self._probe_levels(big_df, validate, probe_kind)
+        b = reduce(DataFrame.unionByName, [p[0] for p in parts])
+        small = reduce(DataFrame.unionByName, [p[1] for p in parts])
         if slim == "point":
             # probe bbox is unbuffered: b_xmin/b_ymin ARE the point
             # coordinates bit-exactly, and Catalyst prunes b_coords
@@ -969,6 +918,10 @@ class SpatialIndex:
                 by0 = btab.column("b_ymin").to_numpy()
                 bx1 = btab.column("b_xmax").to_numpy()
                 by1 = btab.column("b_ymax").to_numpy()
+            if op == "prox":
+                # a NaN bbox fails every overlap test below, so its
+                # pairs would vanish before the distance check sees them
+                _check_finite(np.concatenate([sx0, sy0, sx1, sy1, bx0, by0, bx1, by1]))
             # candidate bbox pairs: small groups skip the STRtree — a
             # dense vectorized overlap mask is faster than tree descent
             # below ~8M cells (profiled: query_pairs was ~36% of group
@@ -1071,40 +1024,17 @@ class SpatialIndex:
         )
 
     def _candidates(self, big_df: DataFrame, validate: bool,
-                    point_probe: bool = False,
-                    rect_probe: bool = False) -> DataFrame:
-        if validate:
-            validate_geoms(big_df)
-        b = _prefixed(big_df, "b", "big_id")
-        b = ensure_parallelism(b)
-        b = with_bbox(b, "b", buffer=0.0, points=point_probe, rects=rect_probe)
-
+                    probe_kind: str | None) -> DataFrame:
+        """Candidate pairs: the cell equi-join of each index level
+        (broadcast when the small side is), deduped by the
+        reference-point rule."""
         def bcast(df):
             return F.broadcast(df) if self.broadcast_small else df
 
-        if self.levels is not None:
-            b = self._probe_cells_ml(b)
-            cand = b.join(bcast(self.small_cells), on="cell", how="inner")
-            # each small row lives on exactly ONE level, so the per-row
-            # reference-point rule dedups within that level and levels
-            # never overlap
-            return self._ref_filter_ml(cand)
-        b = with_cells(b, "b", self.grid, self.resolution, keep_cxy=True)
-        if self.hot_cells is None:
-            cand = b.join(bcast(self.small_cells), on="cell", how="inner")
-            return self._ref_filter(cand, self.resolution)
-        # two-level probe: cold cells at base resolution, hot cells at
-        # the fine resolution (within the hot parent only). A pair's
-        # reference point picks exactly one level, so the union is
-        # duplicate-free by the same rule that dedups coverings.
-        b_cold = b.join(F.broadcast(self.hot_cells), "cell", "left_anti")
-        cand_cold = b_cold.join(bcast(self.small_cells), on="cell", how="inner")
-        cand_cold = self._ref_filter(cand_cold, self.resolution)
-        b_hot = b.join(F.broadcast(self.hot_cells), "cell", "left_semi")
-        b_fine = with_fine_cells(b_hot, "b", self.grid, self.resolution, self.fine_resolution)
-        cand_fine = b_fine.join(bcast(self.small_fine), on="cell", how="inner")
-        cand_fine = self._ref_filter(cand_fine, self.fine_resolution)
-        return cand_cold.unionByName(cand_fine)
+        return reduce(DataFrame.unionByName, [
+            self._ref_filter(b.join(bcast(small), on="cell", how="inner"), res)
+            for b, small, res in self._probe_levels(big_df, validate, probe_kind)
+        ])
 
     def _n_cells(self) -> int:
         """Cached count of populated index cells — the cogroup
@@ -1115,62 +1045,6 @@ class SpatialIndex:
                 cells = cells.unionByName(self.small_fine.select("cell"))
             self._n_cells_cache = int(cells.distinct().count())
         return self._n_cells_cache
-
-    def _small_kinds(self) -> set[int]:
-        if not hasattr(self, "_small_kinds_cache"):
-            row = self.small_cells.select(
-                F.collect_set("s_kind"), F.max(F.size("s_rings")),
-                F.min(F.size("s_coords")), F.max(F.size("s_coords")),
-            ).first()
-            kinds = set(row[0])
-            max_rings = row[1] or 0
-            lo, hi = row[2], row[3]
-            if self.small_fine is not None:
-                r2 = self.small_fine.select(
-                    F.collect_set("s_kind"), F.max(F.size("s_rings")),
-                    F.min(F.size("s_coords")), F.max(F.size("s_coords")),
-                ).first()
-                kinds |= set(r2[0])
-                max_rings = max(max_rings, r2[1] or 0)
-                both_lo = [x for x in (lo, r2[2]) if x is not None]
-                both_hi = [x for x in (hi, r2[3]) if x is not None]
-                lo = min(both_lo) if both_lo else None
-                hi = max(both_hi) if both_hi else None
-            self._small_kinds_cache = kinds
-            self._small_max_rings = int(max_rings)
-            self._small_uniform_size = int(lo) if (
-                lo is not None and lo == hi) else None
-        return self._small_kinds_cache
-
-    @staticmethod
-    def _sql_pip(poly_prefix: str, pt_prefix: str):
-        """Strict point-in-(hole-less)-polygon as a pure-JVM expression:
-        the SAME ray-cast + on-boundary arithmetic as the numpy kernel
-        (kernels.point_in_poly_strict), term for term, so results are
-        bit-identical — but the plan never leaves the JVM. The division
-        in the crossing test is guarded by a nested CASE (ANSI mode
-        raises on /0; the guard condition implies y1 != y2)."""
-        c = f"{poly_prefix}_coords"
-        px = f"element_at({pt_prefix}_coords, 1)"
-        py = f"element_at({pt_prefix}_coords, 2)"
-        x1 = "element_at({c}, 2*i + 1)".format(c=c)
-        y1 = "element_at({c}, 2*i + 2)".format(c=c)
-        x2 = "element_at({c}, 2*i + 3)".format(c=c)
-        y2 = "element_at({c}, 2*i + 4)".format(c=c)
-        segs = f"sequence(0, CAST(size({c})/2 AS INT) - 2)"
-        crossing = (
-            f"aggregate({segs}, 0L, (acc, i) -> acc + "
-            f"(CASE WHEN (({y1} > {py}) != ({y2} > {py})) THEN "
-            f"(CASE WHEN {px} < ({x2} - {x1}) * ({py} - {y1}) / ({y2} - {y1}) + {x1} "
-            f"THEN 1L ELSE 0L END) ELSE 0L END))"
-        )
-        onb = (
-            f"exists({segs}, i -> "
-            f"(({x2} - {x1}) * ({py} - {y1}) - ({y2} - {y1}) * ({px} - {x1})) = 0e0"
-            f" AND {px} >= least({x1}, {x2}) AND {px} <= greatest({x1}, {x2})"
-            f" AND {py} >= least({y1}, {y2}) AND {py} <= greatest({y1}, {y2}))"
-        )
-        return F.expr(f"(({crossing}) % 2 = 1) AND NOT ({onb})")
 
     # unroll cap: polygons up to this many ring points (closed) get the
     # pure-JVM literal-index PIP; beyond it the expression tree stops
@@ -1183,12 +1057,12 @@ class SpatialIndex:
         UNROLLED into literal-index expressions — usable when every
         indexed polygon has the same (small) vertex count, known from
         the build stats job. Arithmetic is the SAME per-segment ray-cast
-        + on-boundary test as _sql_pip and kernels.point_in_poly_strict,
-        term for term (the crossing count is a sum of 0/1 longs, whose
-        addition order cannot change parity), so results stay
-        bit-identical to the kernel path — with no higher-order
-        functions (the interpreted aggregate/exists lambdas measured
-        ~19 us/candidate and kept _sql_pip opt-in). NOTE the generated
+        + on-boundary test as kernels.point_in_poly_strict, term for
+        term (the crossing count is a sum of 0/1 longs, whose addition
+        order cannot change parity), so results stay bit-identical to
+        the kernel path — with no higher-order functions (an
+        aggregate/exists lambda form measured ~19 us/candidate, slower
+        than the kernels' ~11). NOTE the generated
         code for 4+ segments exceeds HotSpot's 8000-bytecode JIT limit;
         with spark.sql.codegen.hugeMethodLimit=8000 (get_spark) the
         stage falls back to Spark's JIT-compiled expression interpreter,
@@ -1231,9 +1105,9 @@ class SpatialIndex:
 
         if how != "contains" or big_kinds is None or set(big_kinds) != {KP}:
             return None
-        if self._small_kinds() != {KG} or self._small_max_rings > 1:
+        if self.small_kinds != {KG} or self.small_max_rings > 1:
             return None
-        size = getattr(self, "_small_uniform_size", None)
+        size = self.small_uniform_size
         if size is None or size % 2 != 0:
             return None
         npts = size // 2
@@ -1272,11 +1146,114 @@ class SpatialIndex:
 
         return contains("s", "b") if how == "contains" else contains("b", "s")
 
+    def _plan(self, op: str, how: str | None, with_geos: bool, strategy: str,
+              big_kinds) -> tuple:
+        """The one place spatial_join and proximity_map choose their
+        route; the first rule that matches wins:
+
+        cogroup  ``strategy="cogroup"``, or with_geos on a non-broadcast
+                 index under ``"auto"``: each row crosses the Arrow
+                 boundary once per covering cell and the geometries
+                 leave per RESULT row (_cogroup_refine).
+        jvm      an exact JVM predicate applies to the candidate pairs:
+                 the rect/point bbox predicate or the unrolled PIP (both
+                 need unbuffered bboxes, so max_distance == 0), or the
+                 point-point distance. No Python operator.
+        arrow    otherwise: one mapInArrow refine (_arrow_refine) over
+                 the candidate pairs, reading the small geometry from
+                 the broadcast, or carried per pair when the index is
+                 not broadcast or with_geos needs it in the output.
+
+        Returns (route, reason, pred); pred is the JVM Column on the jvm
+        route (the join predicate, or the distance), else None. Reads
+        only the build stats, so it runs no Spark job and never touches
+        the geometry broadcast. Logs one DEBUG record per call."""
+        from .geom import POINT as KP
+
+        if strategy not in ("auto", "pairs", "cogroup"):
+            raise ValueError("strategy must be auto|pairs|cogroup")
+        route, pred = "arrow", None
+        probe_kind = _probe_kind(big_kinds)
+        if strategy == "cogroup":
+            route, reason = "cogroup", "strategy=cogroup"
+        elif with_geos and strategy == "auto" and not self.broadcast_small:
+            route, reason = "cogroup", "with_geos on a non-broadcast index"
+        elif with_geos:
+            reason = "with_geos probes"
+        elif op == "prox":
+            reason = f"{probe_kind or 'general'} probes"
+            if probe_kind == "point" and self.small_kinds == {KP}:
+                # same float ops as the numpy kernel (sqrt(dx*dx +
+                # dy*dy)) on the unbuffered scalars: s_px/s_py stored at
+                # build, b_xmin == bx exactly
+                route, reason = "jvm", "point-point distance"
+                pred = F.expr("sqrt((s_px - b_xmin) * (s_px - b_xmin) + "
+                              "(s_py - b_ymin) * (s_py - b_ymin))")
+        else:
+            reason = f"{probe_kind or 'general'} probes"
+            if self.max_distance == 0.0:
+                pred = self._sql_predicate(how, self.small_kinds, big_kinds)
+                if pred is not None:
+                    route, reason = "jvm", "rect/point bbox predicate"
+                else:
+                    npts = self._pip_unroll_npts(how, big_kinds)
+                    if npts is not None:
+                        # point probes are unbuffered, so the bbox
+                        # scalars ARE the point coords bit-exactly and
+                        # b_coords gets pruned from the probe scan
+                        route, reason = "jvm", "unrolled PIP"
+                        pred = self._sql_pip_unrolled("s", npts, "b_xmin", "b_ymin")
+        if route == "arrow":
+            reason += (", small geometry from the broadcast"
+                       if self.broadcast_small and not with_geos
+                       else ", small geometry carried per pair")
+        _log.debug("%s route=%s reason=%s", op, route, reason)
+        return route, reason, pred
+
+    def _run(self, op: str, big_df: DataFrame, how: str | None, with_geos: bool,
+             validate: bool, big_kinds, strategy: str, pair_filter) -> DataFrame:
+        """Filter -> dedup -> refine along the route _plan picks."""
+        route, _, pred = self._plan(op, how, with_geos, strategy, big_kinds)
+        probe_kind = _probe_kind(big_kinds)
+        if route == "cogroup":
+            out = self._cogroup_refine(big_df, validate, op, how, with_geos, probe_kind)
+            return out.where(pair_filter) if pair_filter is not None else out
+        cand = self._candidates(big_df, validate, probe_kind)
+        if pair_filter is not None:
+            # pair-identity predicate: refine is deterministic, so
+            # filtering candidates == filtering results, minus the
+            # refine work for dropped pairs
+            cand = cand.where(pair_filter)
+        if route == "jvm" and op == "join":
+            return cand.where(pred).select("big_id", "small_id")
+        if route == "jvm":
+            return (
+                cand.withColumn("distance", pred)
+                .where(F.col("distance") <= F.lit(self.max_distance))
+                .select("big_id", "small_id", "distance")
+            )
+        fields = [
+            T.StructField("big_id", T.LongType(), False),
+            T.StructField("small_id", T.LongType(), False),
+        ]
+        if op == "prox":
+            fields.append(T.StructField("distance", T.DoubleType(), False))
+        carry = [f"{p}_{c}" for p in ("b", "s") for c in _GEO_COLS] if with_geos else []
+        fields += [cand.schema[c] for c in carry]
+        slim = None if with_geos else probe_kind
+        # with_geos carries the small geometry to its output anyway, so
+        # only a plain refine reads the broadcast
+        bc = None if with_geos else self.small_geo_bc
+        cand = cand.select(*_refine_input_cols(bc, carry, slim=slim))
+        return cand.mapInArrow(
+            _arrow_refine(op, how=how, max_d=self.max_distance, slim=slim,
+                          bc=bc, carry=tuple(carry)),
+            T.StructType(fields))
+
     def spatial_join(
         self, big_df: DataFrame, how: str = "intersects",
         with_geos: bool = False, validate: bool = True,
-        big_kinds=None, big_max_rings: int | None = None, strategy: str = "auto",
-        prefer_sql_pip: bool = False, pair_filter=None,
+        big_kinds=None, strategy: str = "auto", pair_filter=None,
     ) -> DataFrame:
         """DF[big_id, small_id] (+ geometry columns when with_geos),
         matching SJoinRow/SJoinGeoRow (src/structs.rs:369-401).
@@ -1285,6 +1262,10 @@ class SpatialIndex:
         ``big_kinds``: optional set of kind codes present on the probe
         side; when both sides are rect/point-only the exact refine is
         pure SQL and the plan never leaves the JVM.
+
+        ``strategy``: "auto" lets _plan choose; "pairs" differs from it
+        only by keeping with_geos on the candidate pairs on a
+        non-broadcast index; "cogroup" forces the grouped refine.
 
         ``pair_filter``: optional Column predicate over ONLY
         (big_id, small_id), semantically identical to filtering the
@@ -1297,250 +1278,22 @@ class SpatialIndex:
         refine instead (same rows, no pre-refine saving)."""
         if how not in _HOW:
             raise ValueError(f"how must be one of {_HOW}")
-        if strategy not in ("auto", "pairs", "cogroup"):
-            raise ValueError("strategy must be auto|pairs|cogroup")
-        from .geom import POINT as _KP, RECT as _KR
-
-        slim = None
-        if not with_geos and big_kinds is not None:
-            bk = set(big_kinds)
-            if bk == {_KP}:
-                slim = "point"
-            elif bk == {_KR}:
-                slim = "rect"
-        if strategy == "cogroup" or (strategy == "auto" and not self.broadcast_small):
-            # rect/point-only workloads refine in pure SQL: the
-            # non-broadcast plan is then a plain shuffle equi-join on
-            # cell + a JVM predicate — NO geometry crosses the Arrow
-            # boundary and no per-group pandas runs, which measures ~2x
-            # faster and scales better than cogroup.
-            sql_shuffle = (
-                strategy == "auto" and not with_geos
-                and self.max_distance == 0.0
-                and (self._sql_predicate(how, self._small_kinds(), big_kinds)
-                     is not None
-                     # r6: uniform hole-free polygon smalls CONTAIN point
-                     # probes refine via the UNROLLED JVM ray-cast — the
-                     # non-broadcast PIP plan loses its last Python
-                     # operator (was: shuffle-pairs mapInArrow)
-                     or self._pip_unroll_npts(how, big_kinds) is not None)
-            )
-            # slim (point/rect) probes that DO need the kernels skip
-            # cogroup too: the same shuffle equi-join builds candidate
-            # pairs carrying the small geometry, and ONE contiguous
-            # mapInArrow stream refines them (_arrow_pair_refine) —
-            # cogroup's grouped dual-stream machinery is what scales
-            # worst under a full socket (BENCH/COGROUP.md).
-            shuffle_pairs = (
-                strategy == "auto" and self.max_distance == 0.0
-                and slim is not None
-            )
-            # r6 (VERDICT r05 ask #2): GENERAL-geometry probes (polygon/
-            # linestring) take the pairs route too — candidate pairs
-            # carry BOTH geometries through the JVM cell equi-join and
-            # one contiguous mapInArrow decodes them via flat Arrow
-            # buffers (GeomBatch.from_arrow). Cogroup measured 0.246
-            # N->4N efficiency vs 0.672 for pairs at the 60M rehearsal;
-            # it remains only for with_geos (per-RESULT-row geometry
-            # emission beats per-candidate replication) and when forced.
-            general_pairs = (
-                strategy == "auto" and not with_geos and slim is None
-            )
-            if not (sql_shuffle or shuffle_pairs or general_pairs):
-                out = self._cogroup_refine(big_df, validate, "join", how=how,
-                                           with_geos=with_geos,
-                                           big_kinds=big_kinds)
-                return out.where(pair_filter) if pair_filter is not None else out
-        cand = self._candidates(
-            big_df, validate,
-            point_probe=big_kinds is not None and set(big_kinds) == {_KP},
-            rect_probe=big_kinds is not None and set(big_kinds) == {_KR},
-        )
-        if pair_filter is not None:
-            # pair-identity predicate: refine is deterministic, so
-            # filtering candidates == filtering results, minus the
-            # refine work for dropped pairs
-            cand = cand.where(pair_filter)
-        # the fast paths reason over stored bboxes, which are buffered by
-        # max_distance at build — only exact when the buffer is zero
-        sqlpred = None
-        if self.max_distance == 0.0 and not with_geos:
-            from .geom import POINT as KP, POLYGON as KG
-
-            sk = self._small_kinds()
-            sqlpred = self._sql_predicate(how, sk, big_kinds)
-            if sqlpred is None:
-                # r6 DEFAULT-ON: point-in-(hole-less)-polygon with a
-                # uniform small vertex count refines via the UNROLLED
-                # ray-cast — whole-stage codegen, no Python operator,
-                # bit-identical to the kernels (same per-segment
-                # arithmetic). Replaces the opt-in interpreted
-                # aggregate/exists _sql_pip for these workloads.
-                npts = self._pip_unroll_npts(how, big_kinds)
-                if npts is not None:
-                    # point probes are unbuffered, so the bbox scalars
-                    # ARE the point coords bit-exactly and b_coords gets
-                    # pruned from the probe scan
-                    sqlpred = self._sql_pip_unrolled("s", npts,
-                                                     "b_xmin", "b_ymin")
-            if sqlpred is None and big_kinds is not None and prefer_sql_pip:
-                # general (non-uniform / large) polygons, opt-in only:
-                # interpreted higher-order expressions burn more CPU
-                # than the vectorized-kernel path (measured ~19 vs
-                # ~11 us/candidate) but never cross the Python boundary —
-                # preferable when Python workers are the contended
-                # resource (e.g. many concurrent jobs per executor).
-                if how == "contains" and sk == {KG} and set(big_kinds) == {KP} \
-                        and self._small_max_rings <= 1:
-                    sqlpred = self._sql_pip("s", "b")
-                elif how == "within" and sk == {KP} and set(big_kinds) == {KG} \
-                        and big_max_rings is not None and big_max_rings <= 1:
-                    sqlpred = self._sql_pip("b", "s")
-        if sqlpred is not None:
-            return cand.where(sqlpred).select("big_id", "small_id")
-        fields = [
-            T.StructField("big_id", T.LongType(), False),
-            T.StructField("small_id", T.LongType(), False),
-        ]
-        extra = []
-        if with_geos:
-            for p in ("b", "s"):
-                extra += [f"{p}_kind", f"{p}_coords", f"{p}_rings"]
-            fields += [cand.schema[c] for c in extra]
-        schema = T.StructType(fields)
-        out_cols = ["big_id", "small_id"] + extra
-        bc = self.small_geo_bc if not with_geos else None
-        cand = cand.select(*_refine_input_cols(bc, extra, slim=slim))
-        # every non-with_geos refine is a contiguous mapInArrow stream
-        # (r6: including general-geometry probes — GeomBatch.from_arrow
-        # reads the carried coords as one flat buffer per batch); only
-        # with_geos still rides mapInPandas for its passthrough columns
-        if not with_geos and bc is not None:
-            return cand.mapInArrow(
-                _arrow_point_refine(bc, "join", how=how, slim=slim), schema)
-        if not with_geos:
-            return cand.mapInArrow(
-                _arrow_pair_refine("join", how=how, slim=slim), schema)
-
-        def refine(iterator):
-            for pdf in iterator:
-                if len(pdf) == 0:
-                    continue
-                A, ai, B = _refine_sides(pdf, bc)
-                bi = np.arange(len(pdf), dtype=np.int64)
-                if how == "intersects":
-                    mask = kernels.intersects(A, ai, B, bi)
-                elif how == "contains":
-                    mask = kernels.contains(A, ai, B, bi)
-                else:  # within: big contains small (src/index.rs:528-533)
-                    mask = kernels.contains(B, bi, A, ai)
-                yield pdf.loc[mask, out_cols]
-
-        return cand.mapInPandas(refine, schema)
+        return self._run("join", big_df, how, with_geos, validate, big_kinds,
+                         strategy, pair_filter)
 
     def proximity_map(
         self, big_df: DataFrame, with_geos: bool = False, validate: bool = True,
         big_kinds=None, strategy: str = "auto", pair_filter=None,
     ) -> DataFrame:
         """DF[big_id, small_id, distance] with distance <= max_distance
-        (inclusive), matching ProxMapRow (src/structs.rs:313-338).
+        (inclusive), matching ProxMapRow (src/structs.rs:313-338). The
+        stored small bboxes are buffered by max_distance at build, so
+        the cell join's bbox overlap IS the distance prefilter.
 
-        ``pair_filter``: same contract as spatial_join — a predicate
-        over ONLY (big_id, small_id), pushed onto candidate pairs
-        before the distance refine (post-refine on the cogroup
-        strategy); identical rows to filtering the output."""
-        from .geom import POINT as KP
-
-        if (
-            not with_geos
-            and big_kinds is not None
-            and set(big_kinds) == {KP}
-            and self._small_kinds() == {KP}
-        ):
-            # point-point distance entirely in the JVM, same float ops as
-            # the numpy kernel (sqrt(dx*dx + dy*dy)), inclusive <=.
-            # Scalar columns only (s_px/s_py stored unbuffered at build;
-            # b_xmin == bx exactly) — the coords arrays get pruned from
-            # both scans, halving the bytes this bandwidth-bound path
-            # pushes through the join
-            cand = self._candidates(big_df, validate, point_probe=True)
-            if pair_filter is not None:
-                cand = cand.where(pair_filter)
-            dist = F.expr(
-                "sqrt((s_px - b_xmin) * (s_px - b_xmin) + "
-                "(s_py - b_ymin) * (s_py - b_ymin))"
-            )
-            return (
-                cand.withColumn("distance", dist)
-                .where(F.col("distance") <= F.lit(self.max_distance))
-                .select("big_id", "small_id", "distance")
-            )
-        from .geom import RECT as KR
-
-        slim = None
-        if not with_geos and big_kinds is not None:
-            bk = set(big_kinds)
-            if bk == {KP}:
-                slim = "point"
-            elif bk == {KR}:
-                slim = "rect"
-        if strategy == "cogroup" or (strategy == "auto" and not self.broadcast_small):
-            # probes route through the shuffle-pairs plan instead of
-            # cogroup, exactly as in spatial_join: candidates come from
-            # the JVM shuffle equi-join on cell (stored small bboxes are
-            # buffered by max_distance at build, so bbox overlap IS the
-            # distance prefilter), one mapInArrow computes exact
-            # distances. r6: general-geometry probes included (carried
-            # kind/coords/rings, decoded via flat Arrow buffers) —
-            # cogroup remains only for with_geos and when forced.
-            if with_geos or strategy == "cogroup":
-                out = self._cogroup_refine(big_df, validate, "prox",
-                                           with_geos=with_geos,
-                                           big_kinds=big_kinds)
-                return out.where(pair_filter) if pair_filter is not None else out
-        cand = self._candidates(
-            big_df, validate,
-            point_probe=big_kinds is not None and set(big_kinds) == {KP},
-            rect_probe=big_kinds is not None and set(big_kinds) == {KR},
-        )
-        if pair_filter is not None:
-            cand = cand.where(pair_filter)
-        fields = [
-            T.StructField("big_id", T.LongType(), False),
-            T.StructField("small_id", T.LongType(), False),
-            T.StructField("distance", T.DoubleType(), False),
-        ]
-        extra = []
-        if with_geos:
-            for p in ("b", "s"):
-                extra += [f"{p}_kind", f"{p}_coords", f"{p}_rings"]
-            fields += [cand.schema[c] for c in extra]
-        schema = T.StructType(fields)
-        max_d = self.max_distance
-        out_cols = ["big_id", "small_id"] + extra
-        bc = self.small_geo_bc if not with_geos else None
-        cand = cand.select(*_refine_input_cols(bc, extra, slim=slim))
-        if not with_geos and bc is not None:
-            return cand.mapInArrow(
-                _arrow_point_refine(bc, "prox", max_d=max_d, slim=slim), schema)
-        if not with_geos:
-            return cand.mapInArrow(
-                _arrow_pair_refine("prox", max_d=max_d, slim=slim), schema)
-
-        def refine(iterator):
-            for pdf in iterator:
-                if len(pdf) == 0:
-                    continue
-                A, ai, B = _refine_sides(pdf, bc)
-                bi = np.arange(len(pdf), dtype=np.int64)
-                d = kernels.distance(A, ai, B, bi)
-                _check_finite(d)
-                mask = d <= max_d
-                out = pdf.loc[mask, out_cols]
-                out.insert(2, "distance", d[mask])
-                yield out
-
-        return cand.mapInPandas(refine, schema)
+        ``strategy`` and ``pair_filter``: same contract as
+        spatial_join."""
+        return self._run("prox", big_df, None, with_geos, validate, big_kinds,
+                         strategy, pair_filter)
 
     def knn_join(self, big_df: DataFrame, k: int, validate: bool = True,
                  initial_ring: int | None = None, max_rounds: int = 12,

@@ -66,7 +66,7 @@ from .geom import POINT, group_arange
 from .grid import Grid
 from .index import (
     SpatialIndex,
-    _arrow_pair_refine,
+    _arrow_refine,
     _check_finite,
     _prefixed,
     _refine_input_cols,
@@ -421,7 +421,7 @@ def _knn_rounds(spark, idx: SpatialIndex, b: DataFrame, k: int, r: int,
     # point-vs-point: the ring-candidate distances stay entirely in the
     # JVM (same float ops as the numpy kernel: sqrt(dx*dx + dy*dy) on
     # the unbuffered scalar columns) — no Arrow boundary in the loop
-    all_points = point_probe and idx._small_kinds() == {POINT}
+    all_points = point_probe and idx.small_kinds == {POINT}
     if all_points:
         def pairs(cand):
             return cand.selectExpr(
@@ -430,9 +430,9 @@ def _knn_rounds(spark, idx: SpatialIndex, b: DataFrame, k: int, r: int,
                 " AS distance",
             )
     else:
-        refine_cols = _refine_input_cols(None, [], point_probe=point_probe)
-        refine = _arrow_pair_refine("prox", max_d=np.inf,
-                                    slim="point" if point_probe else None)
+        slim = "point" if point_probe else None
+        refine_cols = _refine_input_cols(None, [], slim=slim)
+        refine = _arrow_refine("prox", max_d=np.inf, slim=slim)
 
         def pairs(cand):
             return cand.select(*refine_cols)

@@ -346,11 +346,11 @@ def q_pip_quad_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PIP join through the NON-broadcast cogroup strategy with the
     SLIM point-probe exchange (r4): probe rows cross the shuffle as two
     scalar doubles — no geometry arrays — and the group fn rebuilds the
-    point batch from the scalars. Since r5 the AUTO route for this
-    workload is the shuffle-pairs plan (q_pip_quad_pairs below);
-    cogroup stays the plan for with_geos and general-geometry probes
-    and remains forceable, oracle-checked here. Shares
-    q_pip_quad_contains's oracle."""
+    point batch from the scalars. The AUTO route for this workload is
+    the JVM route (q_pip_quad_pairs below); cogroup is the auto plan
+    only for with_geos on a non-broadcast index and remains
+    forceable, oracle-checked here. Shares q_pip_quad_contains's
+    oracle."""
     quads = _quads_df(spark, sf_dir, "supplier", "s_suppkey")
     pts = _points_df(spark, sf_dir, "customer", "c_custkey")
     idx = SpatialIndex.build(spark, quads, validate=False, broadcast=False)
@@ -359,16 +359,16 @@ def q_pip_quad_cogroup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_pip_quad_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PIP join on a NON-broadcast index with strategy AUTO — the
-    r5 shuffle-pairs route (index.py spatial_join shuffle_pairs
-    branch): a pure-JVM shuffle equi-join on cell builds candidate
-    pairs CARRYING the quad geometry per pair, and one contiguous
-    mapInArrow stream refines them with the kernels. Replaces cogroup
-    as the 100 TB production plan for point/rect-probe workloads whose
-    index outgrows the broadcast budget: same Arrow machinery as the
-    broadcast fast path (no per-group sort, no dual grouped streams),
-    which is the shape that scales with executor count
-    (BENCH/COGROUP.md). Shares q_pip_quad_contains's oracle."""
+    """The PIP join on a NON-broadcast index with strategy AUTO: a
+    pure-JVM shuffle equi-join on cell builds candidate pairs carrying
+    the quad geometry per pair. The quads all have five ring points,
+    so SpatialIndex._plan picks its jvm route and the unrolled ray
+    cast refines them with no Python operator; quads with uneven
+    vertex counts would take the arrow route instead (one contiguous
+    mapInArrow stream of the kernels). Both replace cogroup as the
+    production plan for point/rect-probe workloads whose index
+    outgrows the broadcast budget: no per-group sort, no dual grouped
+    streams (BENCH/COGROUP.md). Shares q_pip_quad_contains's oracle."""
     quads = _quads_df(spark, sf_dir, "supplier", "s_suppkey")
     pts = _points_df(spark, sf_dir, "customer", "c_custkey")
     idx = SpatialIndex.build(spark, quads, validate=False, broadcast=False)
@@ -378,8 +378,8 @@ def q_pip_quad_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_rects_intersect_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SAME rect-rect join on a NON-broadcast index with strategy
     auto: the planner routes rect/point workloads to the pure-JVM
-    shuffle equi-join + SQL refine (index.py spatial_join sql_shuffle
-    branch) — the fastest non-broadcast plan, with no Python operator
+    shuffle equi-join + SQL refine (SpatialIndex._plan's jvm route) —
+    the fastest non-broadcast plan, with no Python operator
     anywhere and NO driver-collected geometry (small_geo_bc is None).
     The cell equi-join itself is an ordinary join Catalyst remains free
     to plan: at driver-gate scale its statistics pick a broadcast hash
@@ -556,8 +556,7 @@ def q_points_within_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     pts = _points_df(spark, sf_dir, "customer", "c_custkey")
     quads = _quads_df(spark, sf_dir, "supplier", "s_suppkey")
     idx = SpatialIndex.build(spark, pts, validate=False)
-    return idx.spatial_join(quads, how="within", validate=False,
-                            big_kinds={3}, big_max_rings=1)
+    return idx.spatial_join(quads, how="within", validate=False, big_kinds={3})
 
 
 def q_quads_intersect_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -573,8 +572,7 @@ def q_quads_intersect_quads(spark: SparkSession, sf_dir: str) -> DataFrame:
     small = _quads_df(spark, sf_dir, "supplier", "s_suppkey")
     big = _quads_df(spark, sf_dir, "part", "p_partkey")
     idx = SpatialIndex.build(spark, small, validate=False)
-    return idx.spatial_join(big, how="intersects", validate=False,
-                            big_kinds={3}, big_max_rings=1)
+    return idx.spatial_join(big, how="intersects", validate=False, big_kinds={3})
 
 
 def q_prox_points(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -148,7 +148,7 @@ def stream_points_in_rects(events: DataFrame, index: SpatialIndex,
     if index.small_fine is not None or index.levels is not None:
         raise ValueError("stream_points_in_rects needs a plain "
                          "single-level index (no hot-split/multilevel)")
-    if index._small_kinds() != {RECT}:
+    if index.small_kinds != {RECT}:
         raise ValueError("stream_points_in_rects: small side must be "
                          "all RECTs")
     cells = with_event_cells(events, index.grid, index.resolution, x_col, y_col)
@@ -173,8 +173,8 @@ def stream_points_in_geoms(events: DataFrame, index: SpatialIndex,
     via the engine's full filter+refine pipeline on a streaming
     DataFrame: cell equi-join (filter) + JVM bbox prune + ONE stateless
     mapInArrow kernel refine over the broadcast small geometries
-    (the same _arrow_point_refine stage the batch broadcast path
-    runs). No state, no watermark requirement — composes with any
+    (the same _arrow_refine stage as the batch arrow route). No
+    state, no watermark requirement — composes with any
     downstream windowed aggregation. Output: DF[big_id, small_id,
     *carry] with big_id = the stream's id column; ``carry`` names
     extra stream columns passed through the refine to matching rows
@@ -190,7 +190,7 @@ def stream_points_in_geoms(events: DataFrame, index: SpatialIndex,
     gathered at build) with max_distance=0."""
     from pyspark.sql import types as T
 
-    from .index import _arrow_point_refine
+    from .index import _arrow_refine
 
     if index.max_distance:
         raise ValueError("stream_points_in_geoms needs max_distance=0 "
@@ -222,7 +222,7 @@ def stream_points_in_geoms(events: DataFrame, index: SpatialIndex,
         T.StructField("small_id", T.LongType(), False),
     ] + [cand.schema[c] for c in carry]
     return cand.mapInArrow(
-        _arrow_point_refine(index.small_geo_bc, "join", how=how, slim="point",
-                            carry=tuple(carry)),
+        _arrow_refine("join", how=how, slim="point", bc=index.small_geo_bc,
+                      carry=tuple(carry)),
         T.StructType(fields),
     )

@@ -95,18 +95,23 @@ def test_validation_raises_through_spark(spark):
     idx.unpersist()
 
 
-@pytest.mark.parametrize("route", ["broadcast", "pairs", "with_geos"])
+@pytest.mark.parametrize("route", ["broadcast", "pairs", "with_geos", "cogroup"])
 def test_nonfinite_distance_raises_value_error(spark, route):
     """validate=False lets a NaN coordinate reach the worker refine; the
     finite-distance contract (index.rs:436) must then fail the query
     with a ValueError, also under python -O (where an assert would
-    vanish and the pair silently drop)."""
+    vanish and the pair silently drop). On the cogroup route the NaN
+    bbox would fail the group's overlap mask first, so the group's
+    bboxes are checked too."""
     small = geoms_to_df(spark, [(RECT, [float("nan"), -1.0, 1.0, 1.0]),
                                 (RECT, [2.0, 2.0, 3.0, 3.0])])
     big = geoms_to_df(spark, [(POINT, [0.7, 0.0]), (POINT, [2.5, 2.5])])
     idx = SpatialIndex.build(spark, small, max_distance=0.5, extent=(-4.0, -4.0, 4.0, 4.0),
-                             resolution=3, validate=False, broadcast=route != "pairs")
+                             resolution=3, validate=False,
+                             broadcast=route not in ("pairs", "cogroup"))
     kw = {"with_geos": True} if route == "with_geos" else {"big_kinds": {POINT}}
+    if route == "cogroup":
+        kw["strategy"] = "cogroup"
     with pytest.raises(Exception, match="ValueError: non-finite distance"):
         idx.proximity_map(big, validate=False, **kw).collect()
     idx.unpersist()
@@ -355,8 +360,8 @@ def test_sql_fast_path_matches_kernel_path(spark):
 
 
 def test_sql_pip_and_prox_fast_paths(spark):
-    """The JVM-only PIP and point-distance fast paths must equal the
-    kernel path bit-for-bit (incl. points on/near boundaries)."""
+    """The JVM point-distance fast path must equal the kernel path
+    bit-for-bit (incl. points on/near polygon boundaries)."""
     rng = random.Random(57)
     polys = []
     for _ in range(30):
@@ -372,27 +377,9 @@ def test_sql_pip_and_prox_fast_paths(spark):
     # exact-boundary probes: vertices and edge midpoints of the first poly
     pp = polys[0][1]
     points += [(POINT, [pp[0], pp[1]]), (POINT, [(pp[0] + pp[2]) / 2, (pp[1] + pp[3]) / 2])]
-    small = geoms_to_df(spark, polys)
     big = geoms_to_df(spark, points)
-    idx = SpatialIndex.build(spark, small, validate=False)
-    fast = sorted((r.big_id, r.small_id) for r in
-                  idx.spatial_join(big, how="contains", validate=False, big_kinds={POINT},
-                                   prefer_sql_pip=True).collect())
-    slow = sorted((r.big_id, r.small_id) for r in
-                  idx.spatial_join(big, how="contains", validate=False).collect())
-    assert fast == slow
-    idx.unpersist()
-    # within variant (points indexed, polygons probe)
-    idx2 = SpatialIndex.build(spark, big)
-    fast_w = sorted((r.big_id, r.small_id) for r in
-                    idx2.spatial_join(small, how="within", validate=False,
-                                      big_kinds={POLYGON}, big_max_rings=1,
-                                      prefer_sql_pip=True).collect())
-    slow_w = sorted((r.big_id, r.small_id) for r in
-                    idx2.spatial_join(small, how="within", validate=False).collect())
-    assert fast_w == slow_w
-    idx2.unpersist()
-    # prox fast path with exact distance equality
+    # prox fast path with exact distance equality (the JVM PIP is
+    # checked by test_sql_pip_unrolled_matches_kernels)
     sup = geoms_to_df(spark, points[:40])
     idx3 = SpatialIndex.build(spark, sup, max_distance=1.5, validate=False)
     fast_p = sorted(tuple(r) for r in idx3.proximity_map(big, validate=False, big_kinds={POINT}).collect())
@@ -447,6 +434,101 @@ def test_sql_pip_unrolled_matches_kernels(spark):
     idxm = SpatialIndex.build(spark, geoms_to_df(spark, mixed), validate=False)
     assert idxm._pip_unroll_npts("contains", {POINT}) is None
     idxm.unpersist()
+
+
+def _plan_route(caplog, op):
+    """The route named by the call's one ``<op> route=`` DEBUG record."""
+    import re
+
+    routes = [re.match(rf"{op} route=(\S+) reason=", m).group(1)
+              for m in caplog.messages if m.startswith(f"{op} route=")]
+    assert len(routes) == 1, caplog.messages
+    return routes[0]
+
+
+def _route_rows(kind, n, rng):
+    rows = []
+    for _ in range(n):
+        x, y = rng.uniform(-3, 3), rng.uniform(-3, 3)
+        if kind == POINT:
+            rows.append((POINT, [x, y]))
+        elif kind == RECT:
+            rows.append((RECT, [x, y, x + rng.uniform(0, 1), y + rng.uniform(0, 1)]))
+        elif kind == TRIANGLE:
+            rows.append((TRIANGLE, [x, y, x + rng.uniform(0.2, 1.2), y,
+                                    x, y + rng.uniform(0.2, 1.2)]))
+        else:
+            rows.append((LINESTRING, [x, y, x + rng.uniform(-1, 1), y + rng.uniform(-1, 1),
+                                      x + rng.uniform(-1, 1), y + rng.uniform(-1, 1)]))
+    return rows
+
+
+# (small kind, probe kind, build kwargs, op, call kwargs, expected route)
+_ROUTES = {
+    "broadcast-jvm": (RECT, RECT, {}, "join", {"big_kinds": {RECT}}, "jvm"),
+    "broadcast-arrow": (TRIANGLE, LINESTRING, {}, "join", {"big_kinds": {LINESTRING}}, "arrow"),
+    "shuffle-jvm": (RECT, RECT, {"broadcast": False}, "join", {"big_kinds": {RECT}}, "jvm"),
+    "shuffle-arrow": (TRIANGLE, LINESTRING, {"broadcast": False}, "join", {}, "arrow"),
+    "prox-point-point": (POINT, POINT, {"max_distance": 0.4}, "prox", {"big_kinds": {POINT}},
+                         "jvm"),
+    "forced-cogroup": (TRIANGLE, RECT, {}, "join",
+                       {"big_kinds": {RECT}, "strategy": "cogroup"}, "cogroup"),
+    "shuffle-with-geos": (TRIANGLE, POINT, {"broadcast": False}, "join", {"with_geos": True},
+                          "cogroup"),
+    "broadcast-with-geos": (TRIANGLE, POINT, {"max_distance": 0.3}, "prox",
+                            {"with_geos": True}, "arrow"),
+    "buffered-slim-join": (TRIANGLE, POINT, {"max_distance": 0.5, "broadcast": False}, "join",
+                           {"big_kinds": {POINT}}, "arrow"),
+}
+
+
+@pytest.mark.parametrize("case", list(_ROUTES))
+def test_route_table(spark, caplog, case):
+    """SpatialIndex._plan's routing table, read from the one DEBUG
+    record each call logs: exact rows on every route against the
+    nested-loop oracle, no geometry broadcast collected on a JVM route,
+    no pandas operator anywhere, and no Spark job for the decision."""
+    import logging
+
+    skind, bkind, build_kw, op, kw, route = _ROUTES[case]
+    rng = random.Random(case)
+    small_rows, big_rows = _route_rows(skind, 60, rng), _route_rows(bkind, 80, rng)
+    idx = SpatialIndex.build(spark, geoms_to_df(spark, small_rows), validate=False,
+                             **build_kw)
+    big = geoms_to_df(spark, big_rows)
+    caplog.set_level(logging.DEBUG, logger="spatialjoin.index")
+    if op == "join":
+        out = idx.spatial_join(big, how="intersects", validate=False, **kw)
+        want = slow_spatial_join(gb(small_rows), gb(big_rows), "intersects",
+                                 idx.max_distance)
+    else:
+        out = idx.proximity_map(big, validate=False, **kw)
+        want = slow_prox_map(gb(small_rows), gb(big_rows), idx.max_distance)
+    assert _plan_route(caplog, op) == route
+    assert "MapInPandas" not in out._jdf.queryExecution().toString()
+    rows = out.collect()
+    got = sorted(tuple(r)[:3 if op == "prox" else 2] for r in rows)
+    assert got == want and len(want) > 0
+    if kw.get("with_geos"):
+        for r in rows:
+            assert list(r.b_coords) == big_rows[r.big_id][1]
+            assert list(r.s_coords) == small_rows[r.small_id][1]
+    if route == "jvm":
+        assert idx._small_geo_bc_val is None
+    if case == "buffered-slim-join":
+        forced = idx.spatial_join(big, how="intersects", validate=False,
+                                  big_kinds={POINT}, strategy="cogroup").collect()
+        assert sorted(tuple(r) for r in forced) == got
+    sc = spark.sparkContext
+    sc.setJobGroup("route-plan", "route decision")
+    try:
+        idx._plan(op, "intersects" if op == "join" else None,
+                  kw.get("with_geos", False), kw.get("strategy", "auto"),
+                  kw.get("big_kinds"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("route-plan") == []
+    idx.unpersist()
 
 
 def _random_rows_with_holes(rng, n):
