@@ -110,10 +110,9 @@ def main() -> None:
             total += best
             total_rows += n
         # kNN cold-vs-warm (round-4 ask): the first sf0.1 run after the
-        # tiny-scale warmup carries the per-round fixed driver cost
-        # (ring-loop scheduling, broadcast re-gather); warm = best-of-N.
-        # The ratio is the number a multi-tenant deployment feels on its
-        # FIRST knn call of a session.
+        # tiny-scale warmup against warm = best-of-N. The ratio is the
+        # number a multi-tenant deployment feels on its FIRST knn call
+        # of a session.
         knn_cold_warm = {
             "knn_cold_sec": round(cold.get("knn_points", 0.0), 4),
             "knn_warm_sec": per_query.get("knn_points"),
@@ -121,20 +120,11 @@ def main() -> None:
                 round(cold["knn_points"] / per_query["knn_points"], 3)
                 if per_query.get("knn_points") else None
             ),
-            # Measured composition of the cold-run surcharge (r5, clean
-            # window, SPARK_GRAFT_KNN_DEBUG stage timers): the ring round
-            # itself is ~equal cold vs warm (1.8 vs 1.3s); the surcharge
-            # sits in the sweep+union+checkpoint stage (3.7s cold vs
-            # 0.6-1.3s warm) — its generated code is shape-specific, so
-            # the sf0.001 warmup's JIT output (6.9s, includes Python
-            # worker spawn) does not transfer and the first sf0.1 run
-            # recompiles; plus the first parquet read of the probe table
-            # into page cache. Once-per-session costs every long-lived
-            # deployment amortizes, not plan defects.
-            # r5 cut real fixed cost regardless: done-id sets are cached
-            # (the final union no longer re-runs the per-round per_probe
-            # aggregation) and the result is coalesced before checkpoint
-            # (was 128 near-empty tasks for 45k rows).
+            # The cold-run surcharge is once-per-session cost: JIT of
+            # the query's shape-specific generated code (the sf0.001
+            # warmup's output does not transfer), Python worker spawn,
+            # and the first parquet read of the probe table into page
+            # cache. Every long-lived deployment amortizes it.
             "knn_cold_note": "first-run JIT + page-cache warmup; see comment",
         }
         # recall@10 of the sublinear ANN paths vs brute force — the

@@ -45,7 +45,7 @@ def worker(cpus: int) -> None:
     quads = _quads_df(spark, SF_DIR, "supplier", "s_suppkey")
     idx = SpatialIndex.build(spark, quads, validate=False)
 
-    cand = idx._candidates(probe, validate=False, probe_kind="point")
+    cand = idx._candidates(idx._probe(probe, validate=False, probe_kind="point"))
     bc = idx.small_geo_bc
     sel = cand.select(*_refine_input_cols(bc, [], slim="point"))
 

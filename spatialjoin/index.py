@@ -47,7 +47,7 @@ import logging
 from functools import reduce
 
 import numpy as np
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -91,8 +91,9 @@ def with_bbox(df: DataFrame, prefix: str, buffer: float = 0.0,
     same doubles). Both scalar forms stay inside whole-stage codegen;
     the generic path's filter/array_min lambdas are INTERPRETED
     higher-order expressions (measured on the 600k-probe bench scan as
-    a top per-row cost)."""
-    b = F.lit(float(buffer))
+    a top per-row cost). ``buffer`` may also be a Column, a per-row
+    buffer (kNN's sampled bound)."""
+    b = buffer if isinstance(buffer, Column) else F.lit(float(buffer))
     if points:
         x = F.element_at(f"{prefix}_coords", 1)
         y = F.element_at(f"{prefix}_coords", 2)
@@ -289,6 +290,26 @@ def _check_finite(d):
             "up front)")
 
 
+def _point_distance(px: str, py: str):
+    """Point-point distance in the JVM, from the stored unbuffered small
+    scalars s_px/s_py to the probe point (px, py), both SQL text: the
+    same float ops as kernels.distance (sqrt(dx*dx + dy*dy)), so the
+    two agree bit for bit."""
+    return F.expr(f"sqrt((s_px - {px}) * (s_px - {px}) + (s_py - {py}) * (s_py - {py}))")
+
+
+def _broadcast_geoms(spark, src: DataFrame):
+    """(sorted_ids, GeomBatch) broadcast of a (small_id, s_kind,
+    s_coords, s_rings) frame: one Arrow collect, decoded as flat
+    buffers (no Row objects), sorted by small_id."""
+    tbl = src.toArrow()
+    tbl = tbl.take(np.argsort(tbl.column("small_id").to_numpy(), kind="stable"))
+    ids = tbl.column("small_id").to_numpy().astype(np.int64)
+    batch = GeomBatch.from_arrow(tbl.column("s_kind").to_numpy(),
+                                 tbl.column("s_coords"), tbl.column("s_rings"))
+    return spark.sparkContext.broadcast((ids, batch))
+
+
 def _rect_batch(x0, y0, x1, y1):
     """GeomBatch of N rects straight from four bbox arrays (no coords
     arrays ever materialized)."""
@@ -458,7 +479,9 @@ class SpatialIndex:
         # r6: materialized LAZILY (see the small_geo_bc property) —
         # build records the source frame and the collect job + driver
         # broadcast happen on first ACCESS, so pure-SQL refine paths
-        # (rect/point predicates, unrolled PIP) never pay for it.
+        # (rect/point predicates, unrolled PIP) never pay for it. The
+        # source frame is kept for non-broadcast indexes too: kNN
+        # collects its sample from it.
         self._small_geo_bc_val = None
         self._small_geo_src = None
         # multilevel (size-stratified) index: populated LEVELS the probe
@@ -468,6 +491,7 @@ class SpatialIndex:
         # of an index): geometry-row count, kind set, max ring count and
         # the per-geometry coordinate count when it is uniform (else None)
         self.n_small_rows = None
+        self.n_small_vals = None  # summed coords-array length
         self.small_kinds = None
         self.small_max_rings = None
         self.small_uniform_size = None
@@ -479,18 +503,10 @@ class SpatialIndex:
         refine paths that stay entirely in the JVM — rect/point SQL
         predicates, the unrolled PIP — never access it, so their
         queries skip the collect job and the driver->executor
-        broadcast. kNN on a broadcast index reads it in every task."""
-        if self._small_geo_bc_val is None and self._small_geo_src is not None:
-            src = self._small_geo_src
-            self._small_geo_src = None
-            # one Arrow collect, decoded as flat buffers (no Row objects)
-            tbl = src.toArrow()
-            tbl = tbl.take(np.argsort(tbl.column("small_id").to_numpy(), kind="stable"))
-            ids = tbl.column("small_id").to_numpy().astype(np.int64)
-            batch = GeomBatch.from_arrow(tbl.column("s_kind").to_numpy(),
-                                         tbl.column("s_coords"), tbl.column("s_rings"))
-            self._small_geo_bc_val = self.spark.sparkContext.broadcast(
-                (ids, batch))
+        broadcast. kNN on a broadcast index reads it in every task.
+        None when the index is not broadcast."""
+        if self._small_geo_bc_val is None and self.broadcast_small:
+            self._small_geo_bc_val = _broadcast_geoms(self.spark, self._small_geo_src)
         return self._small_geo_bc_val
 
     # -- construction -------------------------------------------------------
@@ -639,7 +655,9 @@ class SpatialIndex:
         fine_res = None
         if hot_threshold is not None:
             hist = small_all.groupBy("cell").agg(F.count(F.lit(1)).alias("n"))
-            hot = hist.where(F.col("n") > int(hot_threshold)).select("cell").persist()
+            hot = hist.where(F.col("n") > int(hot_threshold)).select("cell")
+            if persist:
+                hot = hot.persist()
             if hot.count() == 0:
                 hot.unpersist()
                 hot = None
@@ -684,14 +702,13 @@ class SpatialIndex:
             hot_cells=hot, small_fine=small_fine, fine_resolution=fine_res,
             levels=levels,
         )
-        if bc:
-            # defer the geometry collect + broadcast to first use
-            idx._small_geo_src = s.select("small_id", "s_kind",
-                                          "s_coords", "s_rings")
+        # the geometry collect + broadcast is deferred to first use
+        idx._small_geo_src = s.select("small_id", "s_kind", "s_coords", "s_rings")
         # cache build-time stats on the index: later calls (kNN ring
-        # sizing, route planning) would otherwise re-derive each with
-        # its own driver action
+        # and sample sizing, route planning) would otherwise re-derive
+        # each with its own driver action
         idx.n_small_rows = n_small
+        idx.n_small_vals = n_vals
         idx.small_kinds = small_kinds
         idx.small_max_rings = small_max_rings
         idx.small_uniform_size = small_uniform_size
@@ -720,23 +737,26 @@ class SpatialIndex:
             ref_cy = _clamped_cell_coord(ry, self.grid.y0, ch, n)
         return cand.where(bbox_ok & (F.col("cx") == ref_cx) & (F.col("cy") == ref_cy))
 
-    def _probe_levels(self, big_df: DataFrame, validate: bool,
-                      probe_kind: str | None) -> list:
+    @staticmethod
+    def _probe(big_df: DataFrame, validate: bool, probe_kind: str | None) -> DataFrame:
         """The probe side every route starts from: validate, prefix,
-        spread over the cluster, bbox (scalar reads for all-point or
-        all-rect probes), then the covering of each index level as
-        (probe cells, small cells, resolution) triples. A multilevel
-        index is one triple over every populated level (resolution None:
-        cell ids carry their level); a hot split is two, cold cells at
-        the base resolution and hot cells at the fine one (within the
-        hot parent only). A pair's reference point picks exactly one
-        level, so the levels' candidates never overlap."""
+        spread over the cluster, then the unbuffered bbox (scalar reads
+        for all-point or all-rect probes)."""
         if validate:
             validate_geoms(big_df)
-        b = _prefixed(big_df, "b", "big_id")
-        b = ensure_parallelism(b)
-        b = with_bbox(b, "b", buffer=0.0, points=probe_kind == "point",
-                      rects=probe_kind == "rect")
+        b = ensure_parallelism(_prefixed(big_df, "b", "big_id"))
+        return with_bbox(b, "b", buffer=0.0, points=probe_kind == "point",
+                         rects=probe_kind == "rect")
+
+    def _probe_levels(self, b: DataFrame) -> list:
+        """The covering of a bboxed probe (``_probe``, or kNN's probe
+        buffered by its sampled bound) at each index level, as (probe
+        cells, small cells, resolution) triples. A multilevel index is
+        one triple over every populated level (resolution None: cell ids
+        carry their level); a hot split is two, cold cells at the base
+        resolution and hot cells at the fine one (within the hot parent
+        only). A pair's reference point picks exactly one level, so the
+        levels' candidates never overlap."""
         if self.levels is not None:
             b = b.withColumn(
                 "__lvl",
@@ -810,7 +830,7 @@ class SpatialIndex:
             and self.max_distance == 0.0
             and self.small_kinds <= {KP, KR}
         )
-        parts = self._probe_levels(big_df, validate, probe_kind)
+        parts = self._probe_levels(self._probe(big_df, validate, probe_kind))
         b = reduce(DataFrame.unionByName, [p[0] for p in parts])
         small = reduce(DataFrame.unionByName, [p[1] for p in parts])
         if slim == "point":
@@ -1023,17 +1043,16 @@ class SpatialIndex:
             .applyInArrow(fn, schema)
         )
 
-    def _candidates(self, big_df: DataFrame, validate: bool,
-                    probe_kind: str | None) -> DataFrame:
-        """Candidate pairs: the cell equi-join of each index level
-        (broadcast when the small side is), deduped by the
+    def _candidates(self, b: DataFrame) -> DataFrame:
+        """Candidate pairs of a bboxed probe: the cell equi-join of each
+        index level (broadcast when the small side is), deduped by the
         reference-point rule."""
         def bcast(df):
             return F.broadcast(df) if self.broadcast_small else df
 
         return reduce(DataFrame.unionByName, [
-            self._ref_filter(b.join(bcast(small), on="cell", how="inner"), res)
-            for b, small, res in self._probe_levels(big_df, validate, probe_kind)
+            self._ref_filter(cells.join(bcast(small), on="cell", how="inner"), res)
+            for cells, small, res in self._probe_levels(b)
         ])
 
     def _n_cells(self) -> int:
@@ -1183,12 +1202,9 @@ class SpatialIndex:
         elif op == "prox":
             reason = f"{probe_kind or 'general'} probes"
             if probe_kind == "point" and self.small_kinds == {KP}:
-                # same float ops as the numpy kernel (sqrt(dx*dx +
-                # dy*dy)) on the unbuffered scalars: s_px/s_py stored at
-                # build, b_xmin == bx exactly
+                # the probe bbox is unbuffered: b_xmin == bx exactly
                 route, reason = "jvm", "point-point distance"
-                pred = F.expr("sqrt((s_px - b_xmin) * (s_px - b_xmin) + "
-                              "(s_py - b_ymin) * (s_py - b_ymin))")
+                pred = _point_distance("b_xmin", "b_ymin")
         else:
             reason = f"{probe_kind or 'general'} probes"
             if self.max_distance == 0.0:
@@ -1218,7 +1234,7 @@ class SpatialIndex:
         if route == "cogroup":
             out = self._cogroup_refine(big_df, validate, op, how, with_geos, probe_kind)
             return out.where(pair_filter) if pair_filter is not None else out
-        cand = self._candidates(big_df, validate, probe_kind)
+        cand = self._candidates(self._probe(big_df, validate, probe_kind))
         if pair_filter is not None:
             # pair-identity predicate: refine is deterministic, so
             # filtering candidates == filtering results, minus the
@@ -1296,8 +1312,7 @@ class SpatialIndex:
                          strategy, pair_filter)
 
     def knn_join(self, big_df: DataFrame, k: int, validate: bool = True,
-                 initial_ring: int | None = None, max_rounds: int = 12,
-                 big_kinds=None) -> DataFrame:
+                 initial_ring: int | None = None, big_kinds=None) -> DataFrame:
         """k nearest indexed geometries for every probe — the SAME
         built index serves joins, proximity maps, and kNN (the
         module-level ``knn.knn_join`` builds a kNN-density-tuned index
@@ -1305,8 +1320,8 @@ class SpatialIndex:
         schedule for zero extra build cost)."""
         from .knn import _knn_with_index
 
-        return _knn_with_index(big_df.sparkSession, self, big_df, k, validate,
-                               initial_ring, max_rounds, big_kinds=big_kinds)
+        return _knn_with_index(self, big_df, k, validate, initial_ring,
+                               big_kinds=big_kinds)
 
     def unpersist(self):
         self.small_cells.unpersist()

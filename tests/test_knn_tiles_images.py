@@ -8,7 +8,7 @@ import random
 import numpy as np
 import pytest
 
-from spatialjoin.geom import POINT, POLYGON, RECT, GeomBatch
+from spatialjoin.geom import LINESTRING, POINT, POLYGON, RECT, TRIANGLE, GeomBatch
 from spatialjoin import kernels
 from spatialjoin.images import decode, footprints, caption_points, phash64, psnr, synth_images, _pixels_for, quantize_q8
 from spatialjoin.knn import knn_join
@@ -55,7 +55,7 @@ def test_knn_matches_brute_force(spark, caplog, seed, k, broadcast):
     caplog.set_level(logging.DEBUG, logger="spatialjoin.knn")
     got = knn_join(spark, geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows), k=k,
                    broadcast=broadcast)
-    assert _knn_route(caplog) == ("broadcast-local" if broadcast else "rounds")
+    assert _knn_route(caplog) == ("broadcast-local" if broadcast else "sample-bound")
     got = sorted((r.big_id, r.small_id, r.distance, r.rank) for r in got.collect())
     want = _brute_knn(small_rows, big_rows, k)
     assert [(g[0], g[1], g[3]) for g in got] == [(w[0], w[1], w[3]) for w in want]
@@ -63,43 +63,55 @@ def test_knn_matches_brute_force(spark, caplog, seed, k, broadcast):
         assert math.isclose(g[2], w[2], rel_tol=1e-12, abs_tol=1e-15)
 
 
-def test_knn_reliable_checkpoint_cleanup_conf(spark):
-    """r6 (VERDICT r05 ask #4): sessions built by get_spark carry
-    spark.cleaner.referenceTracking.cleanCheckpoints=true, so reliable
-    knn checkpoints are deleted when the result frame is GC'd instead
-    of accumulating forever; with the conf set, repeated knn_join calls
-    under a checkpoint dir must not warn and must agree."""
-    import warnings
+def _persisted_rdds(spark):
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
 
-    from spatialjoin import knn as knnmod
 
-    assert spark.conf.get(
-        "spark.cleaner.referenceTracking.cleanCheckpoints") == "true"
+def test_knn_sample_bound_writes_no_checkpoint(spark):
+    """The non-broadcast route is one lazy query: repeated calls under a
+    reliable checkpoint dir agree, write nothing there, and leave no
+    persisted RDD behind."""
+    import atexit
+    import os
+    import shutil
+    import tempfile
+
     rng = random.Random(77)
     small = geoms_to_df(spark, [(POINT, [rng.uniform(-3, 3), rng.uniform(-3, 3)])
                                 for _ in range(30)])
     big = geoms_to_df(spark, [(POINT, [rng.uniform(-3, 3), rng.uniform(-3, 3)])
                               for _ in range(20)])
-    # NOTE: pyspark exposes no way to unset the checkpoint dir, so it
-    # stays set (to a session-lifetime tmp dir, not pytest's per-test
-    # tmp) for the rest of the session — later knn tests then exercise
-    # the RELIABLE checkpoint path too, which is the deployment shape.
-    import atexit
-    import shutil
-    import tempfile
-
+    # pyspark exposes no way to unset the checkpoint dir, so it stays set
+    # (to a session-lifetime tmp dir) for the rest of the session
     ckpt = tempfile.mkdtemp(prefix="knn_ckpt_")
     atexit.register(shutil.rmtree, ckpt, ignore_errors=True)
     spark.sparkContext.setCheckpointDir(ckpt)
-    knnmod._WARNED_CKPT_CLEANUP.clear()
-    # only the round route checkpoints; the broadcast route has none
-    with warnings.catch_warnings():
-        warnings.simplefilter("error", RuntimeWarning)
-        a = sorted(tuple(r) for r in knn_join(
-            spark, small, big, k=2, validate=False, broadcast=False).collect())
-        b = sorted(tuple(r) for r in knn_join(
-            spark, small, big, k=2, validate=False, broadcast=False).collect())
+    before = _persisted_rdds(spark)
+    a, b = (sorted(tuple(r) for r in knn_join(
+        spark, small, big, k=2, validate=False, broadcast=False).collect()) for _ in range(2))
     assert a == b and len(a) == 40
+    assert [f for _, _, files in os.walk(ckpt) for f in files] == []
+    assert _persisted_rdds(spark) <= before
+
+
+@pytest.mark.parametrize("broadcast", ["auto", False])
+def test_knn_join_leaves_no_persisted_rdd(spark, broadcast):
+    """knn.knn_join's private index never leaves the call, so the call
+    must not persist its covering (rect smalls take the covering count
+    under ``broadcast="auto"``)."""
+    rng = random.Random(83)
+    rects = []
+    for _ in range(200):
+        x, y = rng.uniform(0, 50), rng.uniform(0, 50)
+        rects.append((RECT, [x, y, x + rng.uniform(0, 2), y + rng.uniform(0, 2)]))
+    small = geoms_to_df(spark, rects)
+    big = geoms_to_df(spark, [(POINT, [rng.uniform(0, 50), rng.uniform(0, 50)])
+                              for _ in range(50)])
+    before = _persisted_rdds(spark)
+    for _ in range(2):
+        got = knn_join(spark, small, big, k=3, validate=False, broadcast=broadcast)
+        assert got.count() == 150
+    assert _persisted_rdds(spark) <= before
 
 
 def test_knn_mixed_kinds(spark):
@@ -139,19 +151,6 @@ def test_index_method_knn_matches_module_fn(spark):
     assert got == want
 
 
-def test_knn_max_rounds_exhaustion_raises(spark):
-    """Exhausting max_rounds with probes still pending on the round
-    route must raise, not return incomplete top-k quietly."""
-    rng = random.Random(41)
-    small_rows = [(POINT, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for _ in range(40)]
-    big_rows = [(POINT, [rng.uniform(-5, 5), rng.uniform(-5, 5)]) for _ in range(8)]
-    with pytest.raises(RuntimeError, match="max_rounds"):
-        knn_join(
-            spark, geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows),
-            k=10, resolution=6, broadcast=False, initial_ring=1, max_rounds=1,
-        ).collect()
-
-
 def test_knn_k_larger_than_small_side(spark):
     small_rows = [(POINT, [0.0, 0.0]), (POINT, [1.0, 0.0])]
     big_rows = [(POINT, [0.2, 0.0])]
@@ -169,15 +168,13 @@ def _assert_knn_exact(got, want):
 
 @pytest.mark.parametrize("big_kinds", [None, {POINT}])
 def test_knn_multi_round_escalation_exact(spark, caplog, big_kinds):
-    """Ring escalation on the round route, on integer-grid
-    points (cell size exactly 1, so round 1's bound is exactly 1.0).
-    Probe (3, 4) has its two nearest sites tied at distance 1.0, ON the
-    bound: the strict done-test keeps it pending after round 1. Probe
-    (4, 4) has four sites tied at sqrt(2), broken by id. The probes far
-    outside the sites' extent find nothing in round 1 and finish only
-    once the ring spans the grid."""
+    """The sample-bound route on integer-grid points (cell size exactly
+    1): the sample's k-th distances are exact bounds that the candidate
+    join must reach. Probe (3, 4) has its two nearest sites tied at
+    distance 1.0, probe (4, 4) four sites tied at sqrt(2), broken by id.
+    The probes far outside the sites' extent get a bound that spans
+    the grid."""
     import logging
-    import re
 
     small_rows = [(POINT, [float(x), float(y)]) for x in range(1, 14, 2) for y in range(1, 14, 2)]
     big_rows = [(POINT, [3.0, 4.0]), (POINT, [4.0, 4.0]), (POINT, [7.0, 7.0]),
@@ -186,10 +183,8 @@ def test_knn_multi_round_escalation_exact(spark, caplog, big_kinds):
     got = knn_join(spark, geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows), k=2,
                    extent=(0.0, 0.0, 16.0, 16.0), resolution=4, broadcast=False,
                    initial_ring=1, big_kinds=big_kinds)
-    rounds = [m for m in caplog.messages if m.startswith("knn round=")]
-    pending = [int(re.search(r"pending=(\d+)", m).group(1)) for m in rounds]
-    assert pending == [len(big_rows), 2, 0], rounds
-    assert _knn_route(caplog) == "rounds"
+    assert _knn_route(caplog) == "sample-bound"
+    assert "small_rows=49 sample_rows=13 " in caplog.text, caplog.text
     _assert_knn_exact(got, _brute_knn(small_rows, big_rows, 2))
 
 
@@ -256,11 +251,76 @@ def test_knn_broadcast_route_is_one_local_pass(spark, caplog):
     idx.unpersist()
 
 
+def _knn_cases():
+    rng = random.Random(67)
+
+    def pts(n, lo=0.0, hi=16.0):
+        return [(POINT, [rng.uniform(lo, hi), rng.uniform(lo, hi)]) for _ in range(n)]
+
+    sites = pts(60)
+    far = [(POINT, [5e3, -7e3]), (POINT, [-1e6, 3.0]), (POINT, [8.0, 1e7])]
+    rects = [(RECT, [x, y, x + rng.uniform(0, 3), y + rng.uniform(0, 1)])
+             for x, y in (p[1] for p in pts(8))]
+    general = [(TRIANGLE, [x, y, x + 2, y, x + 1, y + 3]) for x, y in (p[1] for p in pts(4))]
+    general += [(POLYGON, [x, y, x + 4, y, x + 2, y + 5, x, y], [0])
+                for x, y in (p[1] for p in pts(3))]
+    general += [(LINESTRING, p[1] + q[1] + r[1]) for p, q, r in zip(pts(3), pts(3), pts(3))]
+    return {
+        # (small rows, probe rows, k, resolution or None)
+        "empty-probes": (sites, [], 3, None),
+        "empty-small": ([], pts(5), 3, None),
+        "fewer-than-k": (pts(2), pts(6), 3, None),
+        "identical-points": ([(POINT, [2.5, 2.5])] * 9, [(POINT, [2.5, 2.5])] * 4 + pts(3), 3,
+                             None),
+        "far-probes-res6": (sites, far + pts(4), 3, 6),
+        "far-probes-res8": (sites, far + pts(4), 2, 8),
+        "rect-probes": (sites + rects, rects + pts(5), 3, None),
+        "general-probes": (sites + general, general + pts(5), 3, None),
+    }
+
+
+_KNN_CASES = _knn_cases()
+
+
+@pytest.mark.parametrize("case", list(_KNN_CASES))
+def test_knn_sample_bound_route_is_one_query(spark, caplog, case):
+    """On a non-broadcast index the call runs only the build's stats job
+    and the sample collect, however many rings its probes need: no
+    job per ring, no Python-pandas operator, no checkpoint, no cache;
+    results are exact on degenerate inputs."""
+    import logging
+
+    small_rows, big_rows, k, res = _KNN_CASES[case]
+    caplog.set_level(logging.DEBUG, logger="spatialjoin.knn")
+    sc = spark.sparkContext
+    small, big = geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows)
+    sc.setJobGroup(f"knn-sample-bound-{case}", "knn_join call")
+    try:
+        got = knn_join(spark, small, big, k=k, resolution=res, broadcast=False,
+                       validate=False)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # each job by the action that ran it: the build's stats `first`
+    # (two jobs under AQE) and the sample's `toArrow`
+    st = sc.statusTracker()
+    jobs = sorted(" ".join({st.getStageInfo(sid).name.split()[0]
+                            for sid in st.getJobInfo(j).stageIds})
+                  for j in st.getJobIdsForGroup(f"knn-sample-bound-{case}"))
+    assert _knn_route(caplog) == "sample-bound"
+    assert jobs == ["first", "first", "toArrow"], jobs
+    # a checkpoint would cut the lineage above the ring search
+    plan = got._jdf.queryExecution().toString()
+    assert "MapInArrow" in plan and "MapInPandas" not in plan, plan
+    assert "InMemoryRelation" not in plan, plan
+    want = _brute_knn(small_rows, big_rows, k) if small_rows and big_rows else []
+    _assert_knn_exact(got, want)
+
+
 @pytest.mark.parametrize("broadcast", [True, False])
 def test_knn_multilevel_index_exact(spark, caplog, broadcast):
     """kNN on a multilevel index finds small geometries stored on every
-    level: the round route probes each populated level's parent cells
-    of the ring block, the broadcast route keys the geometry itself."""
+    level: the sample-bound route's candidate join covers every
+    populated level, the broadcast route keys the geometry itself."""
     import logging
 
     from spatialjoin.index import SpatialIndex
@@ -279,7 +339,7 @@ def test_knn_multilevel_index_exact(spark, caplog, broadcast):
     assert idx.levels == [2, 5] and idx.broadcast_small == broadcast
     caplog.set_level(logging.DEBUG, logger="spatialjoin.knn")
     got = idx.knn_join(geoms_to_df(spark, big_rows), 3)
-    assert _knn_route(caplog) == ("broadcast-local" if broadcast else "rounds")
+    assert _knn_route(caplog) == ("broadcast-local" if broadcast else "sample-bound")
     _assert_knn_exact(got, _brute_knn(small_rows, big_rows, 3))
     idx.unpersist()
 
@@ -294,7 +354,6 @@ def test_local_knn_task_matches_brute_force(monkeypatch, budget, span):
     import pyarrow as pa
 
     from spatialjoin import knn as knnmod
-    from spatialjoin.geom import LINESTRING, TRIANGLE
     from spatialjoin.grid import Grid
 
     monkeypatch.setattr(knnmod, "_PAIR_BUDGET", budget)

@@ -86,7 +86,8 @@ def test_knn_hot_split_invariance(spark):
     idx_probe = SpatialIndex.build(spark, small, validate=False, hot_threshold=30)
     assert idx_probe.hot_cells is not None, "expected hot cells on this corpus"
     idx_probe.unpersist()
-    # the round route probes the hot split's fine level; the broadcast
+    # the sample-bound route's candidate join covers the hot split's
+    # fine level; the broadcast
     # route reads the geometry broadcast and must agree too
     for broadcast in (False, True):
         got = sorted(
