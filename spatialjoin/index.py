@@ -299,10 +299,10 @@ def _point_distance(px: str, py: str):
 
 
 def _broadcast_geoms(spark, src: DataFrame):
-    """(sorted_ids, GeomBatch) broadcast of a (small_id, s_kind,
-    s_coords, s_rings) frame: one Arrow collect, decoded as flat
-    buffers (no Row objects), sorted by small_id."""
-    tbl = src.toArrow()
+    """(sorted_ids, GeomBatch) broadcast of the small_id, s_kind,
+    s_coords and s_rings columns of ``src``: one Arrow collect, decoded
+    as flat buffers (no Row objects), sorted by small_id."""
+    tbl = src.select("small_id", "s_kind", "s_coords", "s_rings").toArrow()
     tbl = tbl.take(np.argsort(tbl.column("small_id").to_numpy(), kind="stable"))
     ids = tbl.column("small_id").to_numpy().astype(np.int64)
     batch = GeomBatch.from_arrow(tbl.column("s_kind").to_numpy(),
@@ -480,10 +480,11 @@ class SpatialIndex:
         # build records the source frame and the collect job + driver
         # broadcast happen on first ACCESS, so pure-SQL refine paths
         # (rect/point predicates, unrolled PIP) never pay for it. The
-        # source frame is kept for non-broadcast indexes too: kNN
-        # collects its sample from it.
+        # source frame (the small side with its bbox, before the
+        # covering) is kept for non-broadcast indexes too: kNN draws
+        # its samples from it.
         self._small_geo_bc_val = None
-        self._small_geo_src = None
+        self._small_src = None
         # multilevel (size-stratified) index: populated LEVELS the probe
         # side must cover (None = single-resolution index)
         self.levels = levels
@@ -506,7 +507,7 @@ class SpatialIndex:
         broadcast. kNN on a broadcast index reads it in every task.
         None when the index is not broadcast."""
         if self._small_geo_bc_val is None and self.broadcast_small:
-            self._small_geo_bc_val = _broadcast_geoms(self.spark, self._small_geo_src)
+            self._small_geo_bc_val = _broadcast_geoms(self.spark, self._small_src)
         return self._small_geo_bc_val
 
     # -- construction -------------------------------------------------------
@@ -681,13 +682,17 @@ class SpatialIndex:
         if bc == "auto":
             from .geom import POINT as _P
 
-            if small_kinds <= {_P} and max_distance == 0.0 and hot is None \
-                    and not multilevel:
+            if (small_kinds <= {_P} and max_distance == 0.0 and hot is None
+                    and not multilevel) or not persist:
                 # unbuffered points cover exactly ONE cell each, so the
                 # covering row count IS the geometry row count from the
                 # stats job — the auto decision needs no extra driver
                 # action (one job per kNN/point-index build saved); the
-                # persisted covering materializes on first use instead
+                # persisted covering materializes on first use instead.
+                # An unpersisted index (kNN's private one) is decided on
+                # its geometry rows too: its broadcast route reads only
+                # the geometry broadcast, and counting a covering that
+                # is not kept would compute it for nothing
                 n_cells = n_small
             else:
                 n_cells = small_cells.count()  # materializes the cache too
@@ -703,7 +708,7 @@ class SpatialIndex:
             levels=levels,
         )
         # the geometry collect + broadcast is deferred to first use
-        idx._small_geo_src = s.select("small_id", "s_kind", "s_coords", "s_rings")
+        idx._small_src = s
         # cache build-time stats on the index: later calls (kNN ring
         # and sample sizing, route planning) would otherwise re-derive
         # each with its own driver action

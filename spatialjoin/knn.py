@@ -26,18 +26,28 @@ ring search (_local_knn): one mapInArrow over the probe side against a
 broadcast-local (the index is broadcast): the ring search over the
           index's geometry broadcast IS the answer.
 sample-bound (the index is not broadcast): the ring search over a
-          deterministic sample S of the small side (the first rows by
-          xxhash64(small_id), small_id) gives each probe u, its k-th
-          distance within S. Since S is a subset, u bounds the true k-th
-          distance, so every true top-k row, ties with the k-th
-          included, lies within u. The probe bbox, buffered by u plus a
-          rounding slack, goes through the join's own candidate step
-          (SpatialIndex._candidates: cell equi-join, hot-split and
+          broadcast sample S0 of the small side (the rows whose
+          xxhash64(small_id) falls below a threshold) gives each probe
+          u, its k-th distance within S0. Any subset's k-th distance
+          bounds the true one, so every true top-k row, ties with the
+          k-th included, lies within u. The probe bbox, buffered by u
+          plus a rounding slack, goes through the join's own candidate
+          step (SpatialIndex._candidates: cell equi-join, hot-split and
           multilevel levels, reference-point dedup), exact distances
           come from the JVM (all points) or _arrow_refine, and one
-          window keeps the top-k of the rows with distance <= u. When S
-          is the whole small side (at most k rows) its ring search is
-          returned as it stands.
+          window keeps the top-k of the rows with distance <= u. S0 is
+          broadcast, so it holds at most the broadcast caps, and a bound
+          from a fraction f of the side leaves about k/f rows and 2/f
+          index cells within it. So past the caps the bound is first
+          narrowed through nested samples, each _SAMPLE_DIVISOR times
+          the one before (a larger threshold of the same hash): a
+          candidate join of the probes against the sample's own
+          covering, one resolution level (4x the cell area) coarser
+          per 4x fewer rows, keeps each probe's k-th row. Every join then
+          meets about _SAMPLE_DIVISOR * k rows and a few dozen cells per
+          probe, and the number of joins, log(n / cap) to the base
+          _SAMPLE_DIVISOR, is fixed by the build stats. When S0 is the
+          whole small side its ring search is returned as it stands.
 
 Every call logs one DEBUG record on the ``spatialjoin.knn`` logger
 naming its route and the reason (no extra Spark jobs).
@@ -69,10 +79,12 @@ from .index import (
     _check_finite,
     _point_distance,
     _prefixed,
+    _probe_kind,
     _slim_probe_batch,
     ensure_parallelism,
     validate_geoms,
     with_bbox,
+    with_cells,
 )
 
 _log = logging.getLogger(__name__)
@@ -95,8 +107,9 @@ _PAIR_BUDGET = 4_000_000
 # coordinates >> shift), so one giant polygon never explodes into
 # 4^res keys
 _KEY_SPAN = 8
-# sample-bound route: the sample holds 1/_SAMPLE_DIVISOR of the small
-# side (at least k rows, within the broadcast caps)
+# sample-bound route: each sample holds 1/_SAMPLE_DIVISOR of the next
+# (the first at least k rows and within the broadcast caps, the last
+# the whole small side)
 _SAMPLE_DIVISOR = 4
 # relative rounding slack of the buffered probe bbox, on u and on the
 # grid's coordinate magnitude: a geometry whose computed distance is
@@ -129,9 +142,10 @@ def knn_join(
     that fit the broadcast budget) it is one mapInArrow over the probe
     scan reading the geometry broadcast. Otherwise it is one query: a
     ring search over a broadcast sample of the small side bounds each
-    probe's k-th distance, and one candidate join within that bound
-    gives the exact top-k. The private index is not persisted, so the
-    call leaves no cache behind."""
+    probe's k-th distance, candidate joins over larger nested samples
+    narrow the bound, and one candidate join within it gives the exact
+    top-k. The private index is not persisted, so the call leaves no
+    cache behind."""
     if k < 1:
         raise ValueError("k must be >= 1")
     # kNN wants DENSITY ~k/2 per cell (the join default picks a much
@@ -156,16 +170,31 @@ def _auto_initial_ring(n_rows: int, res: int, k: int) -> int:
     return int(np.clip(np.ceil((np.sqrt(2.0 * k / density) - 1.0) / 2.0), 1, 1 << res))
 
 
-def _sample_rows(idx: SpatialIndex, k: int) -> int:
-    """Rows in the sample-bound route's sample: 1/_SAMPLE_DIVISOR of the
-    small side, capped like a broadcast index (BROADCAST_MAX_CELLS rows,
-    and its share of BROADCAST_BYTE_BUDGET from the stats job's
-    coordinate count), and never fewer than k."""
+def _sample_fractions(idx: SpatialIndex, k: int) -> list:
+    """Fractions of the small side in the sample-bound route's nested
+    samples. The first is broadcast: 1/_SAMPLE_DIVISOR of the side,
+    capped like a broadcast index (BROADCAST_MAX_CELLS rows, and its
+    share of BROADCAST_BYTE_BUDGET from the stats job's coordinate
+    count), and at least k rows. Each later one holds _SAMPLE_DIVISOR
+    times the one before; the whole side comes last and is not listed.
+    Empty when the first sample would be the whole side."""
     n = idx.n_small_rows
     cap = BROADCAST_MAX_CELLS
     if idx.n_small_vals:
         cap = min(cap, BROADCAST_BYTE_BUDGET * n // (8 * idx.n_small_vals))
-    return min(n, max(k, min(math.ceil(n / _SAMPLE_DIVISOR), cap)))
+    f = max(k, min(math.ceil(n / _SAMPLE_DIVISOR), cap)) / max(n, 1)
+    fracs = []
+    while f < 1.0:
+        fracs.append(f)
+        f *= _SAMPLE_DIVISOR
+    return fracs
+
+
+def _in_sample(f: float):
+    """Membership of the deterministic sample holding about the fraction
+    ``f`` of the small side: the top 53 bits of xxhash64(small_id) below
+    f * 2^53, so a larger fraction's sample holds every smaller one's."""
+    return F.shiftrightunsigned(F.xxhash64("small_id"), 11) < F.lit(int(f * 2.0 ** 53))
 
 
 def _knn_with_index(idx: SpatialIndex, big_df, k, validate, initial_ring, big_kinds=None):
@@ -180,51 +209,82 @@ def _knn_with_index(idx: SpatialIndex, big_df, k, validate, initial_ring, big_ki
                              "element_at(b_coords, 2) AS by")
     else:
         probe = b.select("big_id", "b_kind", "b_coords", "b_rings")
-    n_search = idx.n_small_rows if idx.broadcast_small else _sample_rows(idx, k)
-    ring0 = initial_ring or _auto_initial_ring(n_search, idx.resolution, k)
     if idx.broadcast_small:
+        ring0 = initial_ring or _auto_initial_ring(idx.n_small_rows, idx.resolution, k)
         _log.debug("knn route=broadcast-local small_rows=%d res=%d ring0=%d",
                    idx.n_small_rows, idx.resolution, ring0)
         return probe.mapInArrow(
             _local_knn(idx.small_geo_bc, idx.grid, idx.resolution, k, ring0, point_probe),
             _TOPK_SCHEMA)
+    fracs = _sample_fractions(idx, k)
+    src = idx._small_src
+    if fracs:
+        src = src.where(_in_sample(fracs[0]))
+    bc = _broadcast_geoms(idx.spark, src)
+    n_sample = len(bc.value[0])
+    # with fewer than k sampled rows every bound is inf: a later sample
+    # could then hold fewer than k rows within it, so only the whole
+    # side follows
+    later = fracs[1:] if n_sample >= k else []
+    ring0 = initial_ring or _auto_initial_ring(n_sample, idx.resolution, k)
     _log.debug("knn route=sample-bound reason=index not broadcast small_rows=%d "
-               "sample_rows=%d res=%d ring0=%d",
-               idx.n_small_rows, n_search, idx.resolution, ring0)
-    whole = n_search == idx.n_small_rows
-    src = idx._small_geo_src
-    if not whole:
-        src = src.orderBy(F.xxhash64("small_id"), "small_id").limit(n_search)
-    bound = probe.mapInArrow(
-        _local_knn(_broadcast_geoms(idx.spark, src), idx.grid, idx.resolution, k,
-                   ring0, point_probe),
-        _TOPK_SCHEMA)
-    if whole:
-        return bound
+               "sample_rows=%d joins=%d res=%d ring0=%d", idx.n_small_rows, n_sample,
+               len(later) + 1 if fracs else 0, idx.resolution, ring0)
+    if not fracs:  # the sample is the whole side
+        return probe.mapInArrow(
+            _local_knn(bc, idx.grid, idx.resolution, k, ring0, point_probe), _TOPK_SCHEMA)
+    near = probe.mapInArrow(
+        _local_knn(bc, idx.grid, idx.resolution, k, ring0, point_probe, bound=True),
+        T.StructType(probe.schema.fields + [T.StructField("_u", T.DoubleType(), False)]))
+    for f in later:
+        near = (_ranked_within(idx, near, point_probe, big_kinds, f)
+                .where(f"rank = {k}").select(*probe.columns, F.col("distance").alias("_u")))
+    return _ranked_within(idx, near, point_probe, big_kinds).where(f"rank <= {k}").select(
+        "big_id", "small_id", "distance", "rank")
+
+
+def _ranked_within(idx: SpatialIndex, near: DataFrame, point_probe: bool, big_kinds,
+                   frac: float | None = None) -> DataFrame:
+    """The small rows (of the sample ``frac``, else all) within each
+    probe's bound ``_u``, ranked by (distance, small_id) per probe. The
+    probe bbox, buffered by u plus a rounding slack, goes through the
+    join's candidate step; a sample's candidates come from its own
+    covering, at the resolution where its cells hold about as many
+    sampled rows as the index's cells hold rows, so a bound from a
+    sample 1/_SAMPLE_DIVISOR the size covers about as many cells as the
+    last join does. Exact distances come from the JVM (all points) or
+    the Arrow refine over the UNBUFFERED probe geometry. Rows of a
+    sample carry the probe columns on, for the next bound."""
     g = idx.grid
     slack = _SLACK * max(abs(g.x0), abs(g.y0), abs(g.x1), abs(g.y1))
-    near = b.join(bound.where(f"rank = {k}").selectExpr("big_id", "distance AS _u"),
-                  "big_id")
-    near = with_bbox(near, "b", points=point_probe,
-                     buffer=F.expr(f"_u * {1.0 + _SLACK!r}D + {slack!r}D"))
-    cand = idx._candidates(near)
-    px, py = "element_at(b_coords, 1)", "element_at(b_coords, 2)"
-    if point_probe and idx.small_kinds == {POINT}:
-        dists = cand.select("big_id", "small_id", _point_distance(px, py).alias("distance"), "_u")
+    buf = F.expr(f"_u * {1.0 + _SLACK!r}D + {slack!r}D")
+    if point_probe:
+        box = near.withColumns({"b_xmin": F.col("bx") - buf, "b_xmax": F.col("bx") + buf,
+                                "b_ymin": F.col("by") - buf, "b_ymax": F.col("by") + buf})
+        geo = ["bx", "by"]
     else:
-        # the refine reads the UNBUFFERED probe geometry (the bbox
-        # columns are buffered by u here)
-        geo = ([F.expr(px).alias("bx"), F.expr(py).alias("by")] if point_probe
-               else ["b_kind", "b_coords", "b_rings"])
+        box = with_bbox(near, "b", buffer=buf, rects=_probe_kind(big_kinds) == "rect")
+        geo = ["b_kind", "b_coords", "b_rings"]
+    if frac is None:
+        cand = idx._candidates(box)
+        carry = []
+    else:
+        res = max(0, idx.resolution - round(math.log(1.0 / frac, 4)))
+        small = with_cells(idx._small_src.where(_in_sample(frac)), "s", g, res, keep_cxy=False)
+        cells = with_cells(box, "b", g, res, keep_cxy=True)
+        cand = idx._ref_filter(cells.join(small, "cell"), res)
+        carry = geo
+    if point_probe and idx.small_kinds == {POINT}:
+        dists = cand.select("big_id", "small_id", _point_distance("bx", "by").alias("distance"),
+                            "_u", *carry)
+    else:
         dists = cand.select("big_id", "small_id", *geo, "s_kind", "s_coords", "s_rings",
                             "_u").mapInArrow(
             _arrow_refine("prox", max_d=np.inf, slim="point" if point_probe else None,
-                          carry=("_u",)),
-            T.StructType(_OUT_SCHEMA.fields + [T.StructField("_u", T.DoubleType(), False)]))
-    return dists.where("distance <= _u").selectExpr(
-        "big_id", "small_id", "distance",
-        "row_number() OVER (PARTITION BY big_id ORDER BY distance, small_id) AS rank",
-    ).where(f"rank <= {k}")
+                          carry=("_u", *carry)),
+            T.StructType(_OUT_SCHEMA.fields + [cand.schema[c] for c in ("_u", *carry)]))
+    return dists.where("distance <= _u").withColumn(
+        "rank", F.expr("row_number() OVER (PARTITION BY big_id ORDER BY distance, small_id)"))
 
 
 # -- ring search -------------------------------------------------------------
@@ -310,10 +370,13 @@ def _ring_candidates(tables, multi: bool, n_small: int, bx0, by0, bx1, by1):
             yield lo + plo, phi - plo, pi, gi
 
 
-def _local_knn(bc, grid: Grid, res: int, k: int, ring0: int, point_probe: bool):
+def _local_knn(bc, grid: Grid, res: int, k: int, ring0: int, point_probe: bool,
+               bound: bool = False):
     """mapInArrow function of the ring search: the exact top-k of every
     probe in the batch against the broadcast (sorted_ids, GeomBatch)
-    ``bc``, emitted as (big_id, small_id, distance, rank) rows."""
+    ``bc``, emitted as (big_id, small_id, distance, rank) rows. With
+    ``bound``, every input row is emitted instead, plus ``_u``: its k-th
+    distance (inf when ``bc`` holds fewer than k geometries)."""
     n = 1 << res
     min_dim = min(grid.cell_size(res))
 
@@ -325,9 +388,9 @@ def _local_knn(bc, grid: Grid, res: int, k: int, ring0: int, point_probe: bool):
                             pa.field("distance", pa.float64(), False),
                             pa.field("rank", pa.int32(), False)])
         ids, A = bc.value
-        tables, multi = _small_cell_keys(A, grid, res)
+        tables, multi = _small_cell_keys(A, grid, res) if len(ids) else ([], False)
         for batch in it:
-            if batch.num_rows == 0 or len(ids) == 0:
+            if batch.num_rows == 0 or (len(ids) == 0 and not bound):
                 continue
             col = {nm: batch.column(i) for i, nm in enumerate(batch.schema.names)}
             bid = col["big_id"].to_numpy(zero_copy_only=False)
@@ -336,7 +399,8 @@ def _local_knn(bc, grid: Grid, res: int, k: int, ring0: int, point_probe: bool):
             _check_finite(np.concatenate([xmin, ymin, xmax, ymax]))
             pcx0, pcy0 = grid.grid_coords(xmin, ymin, res)
             pcx1, pcy1 = grid.grid_coords(xmax, ymax, res)
-            pend = np.arange(len(B))
+            pend = np.arange(len(B) if len(ids) else 0)
+            u = np.full(len(B), np.inf)
             r = ring0
             while len(pend):
                 bx0 = np.maximum(pcx0[pend] - r, 0)
@@ -364,6 +428,9 @@ def _local_knn(bc, grid: Grid, res: int, k: int, ring0: int, point_probe: bool):
                     # with a smaller id could still take the k-th place
                     ok = (kth < covered) | final[first:first + m]
                     done[first:first + m] = ok
+                    if bound:
+                        u[probe[ok]] = kth[ok]
+                        continue
                     keep = (rank < k) & ok[pi]
                     yield pa.RecordBatch.from_arrays(
                         [pa.array(bid[probe[pi[keep]]]), pa.array(ids[gi[keep]]),
@@ -371,5 +438,9 @@ def _local_knn(bc, grid: Grid, res: int, k: int, ring0: int, point_probe: bool):
                         schema=schema)
                 pend = pend[~done]
                 r *= 2
+            if bound:
+                yield pa.RecordBatch.from_arrays(
+                    batch.columns + [pa.array(u)],
+                    schema=batch.schema.append(pa.field("_u", pa.float64(), False)))
 
     return fn

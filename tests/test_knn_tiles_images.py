@@ -97,8 +97,9 @@ def test_knn_sample_bound_writes_no_checkpoint(spark):
 @pytest.mark.parametrize("broadcast", ["auto", False])
 def test_knn_join_leaves_no_persisted_rdd(spark, broadcast):
     """knn.knn_join's private index never leaves the call, so the call
-    must not persist its covering (rect smalls take the covering count
-    under ``broadcast="auto"``)."""
+    must not persist its covering, nor count it to decide the broadcast
+    (rect smalls cover several cells): on both routes the call runs only
+    the stats job and one geometry collect."""
     rng = random.Random(83)
     rects = []
     for _ in range(200):
@@ -108,8 +109,19 @@ def test_knn_join_leaves_no_persisted_rdd(spark, broadcast):
     big = geoms_to_df(spark, [(POINT, [rng.uniform(0, 50), rng.uniform(0, 50)])
                               for _ in range(50)])
     before = _persisted_rdds(spark)
-    for _ in range(2):
-        got = knn_join(spark, small, big, k=3, validate=False, broadcast=broadcast)
+    sc = spark.sparkContext
+    for i in range(2):
+        group = f"knn-no-cache-{broadcast}-{i}"
+        sc.setJobGroup(group, "knn_join call")
+        try:
+            got = knn_join(spark, small, big, k=3, validate=False, broadcast=broadcast)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        st = sc.statusTracker()
+        jobs = sorted(" ".join({st.getStageInfo(sid).name.split()[0]
+                                for sid in st.getJobInfo(j).stageIds})
+                      for j in st.getJobIdsForGroup(group))
+        assert jobs == ["first", "first", "toArrow"], jobs
         assert got.count() == 150
     assert _persisted_rdds(spark) <= before
 
@@ -184,7 +196,7 @@ def test_knn_multi_round_escalation_exact(spark, caplog, big_kinds):
                    extent=(0.0, 0.0, 16.0, 16.0), resolution=4, broadcast=False,
                    initial_ring=1, big_kinds=big_kinds)
     assert _knn_route(caplog) == "sample-bound"
-    assert "small_rows=49 sample_rows=13 " in caplog.text, caplog.text
+    assert "small_rows=49 sample_rows=10 joins=1 " in caplog.text, caplog.text
     _assert_knn_exact(got, _brute_knn(small_rows, big_rows, 2))
 
 
@@ -314,6 +326,46 @@ def test_knn_sample_bound_route_is_one_query(spark, caplog, case):
     assert "InMemoryRelation" not in plan, plan
     want = _brute_knn(small_rows, big_rows, k) if small_rows and big_rows else []
     _assert_knn_exact(got, want)
+
+
+@pytest.mark.parametrize("probes", ["points", "general"])
+def test_knn_nested_samples_exact(spark, caplog, monkeypatch, probes):
+    """A small side far above the broadcast cap takes nested samples,
+    each 4x the one before, and one candidate join per later sample and
+    for the whole side: every bound stays exact, and the call still runs
+    only the stats job and the first sample's collect. All-point sides
+    take the JVM distance, the rest the Arrow refine."""
+    import logging
+
+    from spatialjoin import knn
+
+    monkeypatch.setattr(knn, "BROADCAST_MAX_CELLS", 20)
+    rng = random.Random(59)
+    small_rows = [(POINT, [rng.uniform(0, 30), rng.uniform(0, 30)]) for _ in range(360)]
+    big_rows = [(POINT, [rng.uniform(-5, 35), rng.uniform(-5, 35)]) for _ in range(40)]
+    big_rows += [(POINT, [400.0, -300.0])]
+    if probes == "general":
+        small_rows += [(RECT, [x, y, x + rng.uniform(0, 2), y + rng.uniform(0, 2)])
+                       for x, y in ((rng.uniform(0, 30), rng.uniform(0, 30)) for _ in range(40))]
+        big_rows += [(TRIANGLE, [x, y, x + 2, y, x + 1, y + 3])
+                     for x, y in ((rng.uniform(0, 30), rng.uniform(0, 30)) for _ in range(8))]
+    caplog.set_level(logging.DEBUG, logger="spatialjoin.knn")
+    sc = spark.sparkContext
+    sc.setJobGroup(f"knn-nested-{probes}", "knn_join call")
+    try:
+        got = knn_join(spark, geoms_to_df(spark, small_rows), geoms_to_df(spark, big_rows), k=3,
+                       broadcast=False, validate=False,
+                       big_kinds={POINT} if probes == "points" else None)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    st = sc.statusTracker()
+    jobs = sorted(" ".join({st.getStageInfo(sid).name.split()[0]
+                            for sid in st.getJobInfo(j).stageIds})
+                  for j in st.getJobIdsForGroup(f"knn-nested-{probes}"))
+    assert _knn_route(caplog) == "sample-bound"
+    assert " joins=3 " in caplog.text, caplog.text
+    assert jobs == ["first", "first", "toArrow"], jobs
+    _assert_knn_exact(got, _brute_knn(small_rows, big_rows, 3))
 
 
 @pytest.mark.parametrize("broadcast", [True, False])
