@@ -66,8 +66,7 @@ def __getattr__(name):
         from . import multimodal
 
         return getattr(multimodal, name)
-    if name in ("stream_points_in_rects", "stream_points_in_geoms",
-                "enrich_stream_with_index", "windowed_cell_counts"):
+    if name in ("stream_points_in_geoms", "windowed_cell_counts"):
         from . import streaming
 
         return getattr(streaming, name)
@@ -100,9 +99,7 @@ __all__ = [
     "dup_clusters",
     "image_features",
     "variant_phash",
-    "stream_points_in_rects",
     "stream_points_in_geoms",
-    "enrich_stream_with_index",
     "windowed_cell_counts",
     "ResumableRun",
     "validate_geoms",

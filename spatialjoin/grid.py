@@ -89,58 +89,6 @@ class Grid:
         cx, cy = self.grid_coords(x, y, res)
         return self.pack(cx, cy, res)
 
-    # -- hierarchy ----------------------------------------------------------
-
-    @staticmethod
-    def parent(cell, steps=1):
-        cx, cy, res = Grid.unpack(cell)
-        return Grid.pack(cx >> steps, cy >> steps, int(res[0]) - steps if np.ndim(res) else res - steps)
-
-    def k_ring(self, cell, k: int):
-        """All cells within Chebyshev distance k of each input cell
-        (clamped to the grid). Returns (owner, cells)."""
-        cx, cy, res = self.unpack(cell)
-        r = int(res[0]) if len(np.atleast_1d(res)) else 0
-        n = 1 << r
-        side = 2 * k + 1
-        dx = np.arange(-k, k + 1, dtype=np.int64)
-        offx = np.repeat(dx, side)
-        offy = np.tile(dx, side)
-        m = len(cx)
-        owner = np.repeat(np.arange(m, dtype=np.int64), side * side)
-        nx = cx[owner] + np.tile(offx, m)
-        ny = cy[owner] + np.tile(offy, m)
-        ok = (nx >= 0) & (nx < n) & (ny >= 0) & (ny < n)
-        return owner[ok], self.pack(nx[ok], ny[ok], r)
-
-    # -- bbox covering ------------------------------------------------------
-
-    def cover_bbox(self, xmin, ymin, xmax, ymax, res: int, cap: int = 4096):
-        """Cells overlapping each bbox at ``res``.
-
-        Returns (owner, cells). ``cap`` bounds the per-row blowup: rows
-        whose covering would exceed cap raise (choose a coarser
-        resolution for such data — see choose_resolution).
-        """
-        cx0, cy0 = self.grid_coords(xmin, ymin, res)
-        cx1, cy1 = self.grid_coords(xmax, ymax, res)
-        nx = cx1 - cx0 + 1
-        ny = cy1 - cy0 + 1
-        counts = nx * ny
-        if counts.size and int(counts.max()) > cap:
-            raise ValueError(
-                f"bbox covers {int(counts.max())} cells at res={res} (cap={cap}); "
-                "use a coarser resolution"
-            )
-        total = int(counts.sum())
-        owner = np.repeat(np.arange(len(counts), dtype=np.int64), counts)
-        base = np.concatenate([[0], np.cumsum(counts)[:-1]])
-        k = np.arange(total, dtype=np.int64) - np.repeat(base, counts)
-        rep_ny = ny[owner]
-        ix = cx0[owner] + k // rep_ny
-        iy = cy0[owner] + k - (k // rep_ny) * rep_ny
-        return owner, self.pack(ix, iy, res)
-
     def choose_resolution(self, widths, heights, target_cells_per_geom: float = 2.0,
                           min_res: int = 2, max_res: int = MAX_RES) -> int:
         """Pick the join resolution from indexed-side bbox stats.

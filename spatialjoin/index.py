@@ -25,9 +25,11 @@ Spark-first re-expression of the reference crate's two operators
               geometry comes from a broadcast or rides with each pair);
               ``cogroup`` — both sides grouped by cell and filtered,
               deduped and refined per group in one ``applyInArrow``
-              (forced, or with_geos on a non-broadcast index). Each call
-              logs its route and the reason at DEBUG on the
-              ``spatialjoin.index`` logger.
+              (forced, or with_geos on a non-broadcast index when no JVM
+              predicate applies). with_geos and a stream's payload
+              columns pass through whichever route runs. Each call,
+              streaming joins included, logs its route and the reason
+              at DEBUG on the ``spatialjoin.index`` logger.
 
 ``max_distance`` buffering of the indexed side's bboxes replicates
 cheap_buffer (src/rtrees.rs:159-166): the epsilon of the distance join
@@ -63,11 +65,15 @@ BROADCAST_MAX_CELLS = 2_000_000
 BROADCAST_BYTE_BUDGET = 128 * 1024 * 1024
 
 _GEO_COLS = ("kind", "coords", "rings")
+# what with_geos adds to a join's output: both sides' geometry columns
+_GEO_CARRY = tuple(f"{p}_{c}" for p in ("b", "s") for c in _GEO_COLS)
 
 _log = logging.getLogger(__name__)
 
 
-def _prefixed(df: DataFrame, prefix: str, id_out: str) -> DataFrame:
+def _prefixed(df: DataFrame, prefix: str, id_out: str, keep=()) -> DataFrame:
+    """The id and geometry columns renamed under ``prefix``, plus the
+    ``keep`` columns unchanged (a stream's payload)."""
     # NULL array values are pathologically slow through Spark 4.1's
     # row->Arrow writer (~80us/row measured); ship empty arrays instead
     rings = F.coalesce(F.col("rings"), F.array().cast("array<int>"))
@@ -76,6 +82,7 @@ def _prefixed(df: DataFrame, prefix: str, id_out: str) -> DataFrame:
         F.col("kind").alias(f"{prefix}_kind"),
         F.col("coords").alias(f"{prefix}_coords"),
         rings.alias(f"{prefix}_rings"),
+        *keep,
     )
 
 
@@ -238,7 +245,10 @@ def ensure_parallelism(df: DataFrame) -> DataFrame:
     """Round-robin repartition ONLY when the scan yields fewer
     partitions than the cluster has slots (small local files). Real
     table scans at scale already have thousands of partitions and skip
-    the shuffle entirely."""
+    the shuffle entirely. A stream is returned unchanged: ``df.rdd``
+    cannot run on it."""
+    if df.isStreaming:
+        return df
     spark = df.sparkSession
     target = spark.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < max(target // 2, 1):
@@ -383,6 +393,21 @@ def _slim_probe_batch(col, slim):
     )
 
 
+def _refine_mask(op, how, max_d, A, ai, B, bi):
+    """The exact predicate over pairs (A[ai], B[bi]) — A the small
+    side, B the probe: (mask, distance), distance None on a join."""
+    if op == "prox":
+        d = kernels.distance(A, ai, B, bi)
+        _check_finite(d)
+        return d <= max_d, d
+    if how == "intersects":
+        return kernels.intersects(A, ai, B, bi), None
+    if how == "contains":
+        return kernels.contains(A, ai, B, bi), None
+    # within: big contains small (src/index.rs:528-533)
+    return kernels.contains(B, bi, A, ai), None
+
+
 def _arrow_refine(op, how=None, max_d=None, slim=None, bc=None, carry=()):
     """The engine's one pair refine, a ``mapInArrow`` function: Arrow
     batches of candidate pairs in, the surviving (big_id, small_id
@@ -421,22 +446,12 @@ def _arrow_refine(op, how=None, max_d=None, slim=None, bc=None, carry=()):
                 ai = bi
             else:
                 ai = np.searchsorted(ids_geo, sid)
-            if op == "join":
-                if how == "intersects":
-                    mask = kernels.intersects(A, ai, B, bi)
-                elif how == "contains":
-                    mask = kernels.contains(A, ai, B, bi)
-                else:  # within: big contains small (src/index.rs:528-533)
-                    mask = kernels.contains(B, bi, A, ai)
-                arrays = [pa.array(bid[mask]), pa.array(sid[mask])]
-                names = ["big_id", "small_id"]
-            else:
-                d = kernels.distance(A, ai, B, bi)
-                _check_finite(d)
-                mask = d <= max_d
-                arrays = [pa.array(bid[mask]), pa.array(sid[mask]),
-                          pa.array(d[mask])]
-                names = ["big_id", "small_id", "distance"]
+            mask, d = _refine_mask(op, how, max_d, A, ai, B, bi)
+            arrays = [pa.array(bid[mask]), pa.array(sid[mask])]
+            names = ["big_id", "small_id"]
+            if d is not None:
+                arrays.append(pa.array(d[mask]))
+                names.append("distance")
             if carry:
                 pamask = pa.array(mask)
                 for nm in carry:
@@ -743,13 +758,15 @@ class SpatialIndex:
         return cand.where(bbox_ok & (F.col("cx") == ref_cx) & (F.col("cy") == ref_cy))
 
     @staticmethod
-    def _probe(big_df: DataFrame, validate: bool, probe_kind: str | None) -> DataFrame:
-        """The probe side every route starts from: validate, prefix,
-        spread over the cluster, then the unbuffered bbox (scalar reads
-        for all-point or all-rect probes)."""
+    def _probe(big_df: DataFrame, validate: bool, probe_kind: str | None,
+               keep=()) -> DataFrame:
+        """The probe side every route starts from: validate, prefix
+        (keeping the ``keep`` columns), spread over the cluster, then
+        the unbuffered bbox (scalar reads for all-point or all-rect
+        probes)."""
         if validate:
             validate_geoms(big_df)
-        b = ensure_parallelism(_prefixed(big_df, "b", "big_id"))
+        b = ensure_parallelism(_prefixed(big_df, "b", "big_id", keep))
         return with_bbox(b, "b", buffer=0.0, points=probe_kind == "point",
                          rects=probe_kind == "rect")
 
@@ -778,9 +795,9 @@ class SpatialIndex:
         return [(b_cold, self.small_cells, self.resolution),
                 (b_fine, self.small_fine, self.fine_resolution)]
 
-    def _cogroup_refine(self, big_df: DataFrame, validate: bool, op: str,
-                        how: str | None, with_geos: bool,
-                        probe_kind: str | None) -> DataFrame:
+    def _cogroup_refine(self, b: DataFrame, op: str, how: str | None,
+                        with_geos: bool, probe_kind: str | None,
+                        carry: list) -> DataFrame:
         """Shuffle-side execution for non-broadcastable indexes: cogroup
         both sides by cell and, per cell group, bulk-load a packed
         STRtree over the small side's (buffered) bboxes, probe with the
@@ -788,10 +805,11 @@ class SpatialIndex:
         refine with the vectorized kernels — all inside one
         applyInArrow. Each input row crosses the Arrow boundary once
         per covering cell instead of once per CANDIDATE PAIR, which is
-        the difference that matters when cells are dense. ``with_geos``
-        emits both geometries per RESULT row (like the reference's
-        with_geos iterators, src/index.rs:537-599) without the
-        per-candidate-pair explosion of the pairs path.
+        the difference that matters when cells are dense. ``b`` is the
+        bboxed probe (``_probe``). The ``carry`` columns (with_geos:
+        both geometries) leave per RESULT row, taken from the side that
+        holds them, without the per-candidate-pair explosion of the
+        pairs path.
 
         PARALLELISM = number of (salted) groups, NOT number of rows: a
         coarse grid (e.g. resolution 2 -> <= 16 populated cells) would
@@ -835,28 +853,25 @@ class SpatialIndex:
             and self.max_distance == 0.0
             and self.small_kinds <= {KP, KR}
         )
-        parts = self._probe_levels(self._probe(big_df, validate, probe_kind))
+        parts = self._probe_levels(b)
         b = reduce(DataFrame.unionByName, [p[0] for p in parts])
         small = reduce(DataFrame.unionByName, [p[1] for p in parts])
         if slim == "point":
             # probe bbox is unbuffered: b_xmin/b_ymin ARE the point
             # coordinates bit-exactly, and Catalyst prunes b_coords
             # from the probe scan entirely
-            b = b.select("cell", "big_id",
-                         F.col("b_xmin").alias("bx"), F.col("b_ymin").alias("by"))
+            bcols = [F.col("b_xmin").alias("bx"), F.col("b_ymin").alias("by")]
         elif slim == "rect":
-            b = b.select("cell", "big_id", "b_xmin", "b_ymin", "b_xmax", "b_ymax")
+            bcols = ["b_xmin", "b_ymin", "b_xmax", "b_ymax"]
         else:
-            b = b.select("cell", "big_id", "b_kind", "b_coords", "b_rings",
-                         "b_xmin", "b_ymin", "b_xmax", "b_ymax")
-        if bbox_only:
-            # s_kind (one byte) stays for the point-dim guard; the
-            # coords/rings arrays — the shuffle's heavy columns — do not
-            small = small.select("cell", "small_id", "s_kind",
-                                 "s_xmin", "s_ymin", "s_xmax", "s_ymax")
-        else:
-            small = small.select("cell", "small_id", "s_kind", "s_coords", "s_rings",
-                                 "s_xmin", "s_ymin", "s_xmax", "s_ymax")
+            bcols = ["b_kind", "b_coords", "b_rings", "b_xmin", "b_ymin", "b_xmax", "b_ymax"]
+        # with_geos sets slim None, so the probe geometry is in bcols
+        b = b.select("cell", "big_id", *bcols, *[c for c in carry if c not in _GEO_CARRY])
+        # bbox_only: s_kind (one byte) stays for the point-dim guard;
+        # the coords/rings arrays — the shuffle's heavy columns — do not
+        small = small.select("cell", "small_id", "s_kind",
+                             *([] if bbox_only else ["s_coords", "s_rings"]),
+                             "s_xmin", "s_ymin", "s_xmax", "s_ymax")
         spark = small.sparkSession
         n_groups = self._n_cells()
         par = spark.sparkContext.defaultParallelism
@@ -907,11 +922,7 @@ class SpatialIndex:
         ]
         if op == "prox":
             fields.append(T.StructField("distance", T.DoubleType(), False))
-        geo_cols_b = ["b_kind", "b_coords", "b_rings"]
-        geo_cols_s = ["s_kind", "s_coords", "s_rings"]
-        if with_geos:
-            fields += [b.schema[c] for c in geo_cols_b]
-            fields += [small.schema[c] for c in geo_cols_s]
+        fields += [(b if c in b.columns else small).schema[c] for c in carry]
         schema = T.StructType(fields)
         grid = self.grid
         max_d = self.max_distance
@@ -993,54 +1004,23 @@ class SpatialIndex:
                              & (bx1[qi] >= sx1[ti]) & (by1[qi] >= sy1[ti]))
                         if slim == "point":
                             m &= skind[ti] == KP
-                mq, mt = qi[m], ti[m]
-                return pa.Table.from_arrays(
-                    [pa.array(btab.column("big_id").to_numpy()[mq]),
-                     pa.array(stab.column("small_id").to_numpy()[mt])],
-                    names=["big_id", "small_id"],
-                )
-            A = GeomBatch.from_arrow(
-                stab.column("s_kind").to_numpy(),
-                stab.column("s_coords"), stab.column("s_rings"),
-            )
-            if slim == "point":
-                B = _point_batch(bx0, by0)
-            elif slim == "rect":
-                B = _rect_batch(bx0, by0, bx1, by1)
+                d = None
             else:
-                B = GeomBatch.from_arrow(
-                    btab.column("b_kind").to_numpy(),
-                    btab.column("b_coords"), btab.column("b_rings"),
-                )
-            big_ids = btab.column("big_id").to_numpy()
-            small_ids = stab.column("small_id").to_numpy()
-            if op == "prox":
-                d = kernels.distance(A, ti, B, qi)
-                _check_finite(d)
-                m = d <= max_d
-            elif how == "intersects":
-                m = kernels.intersects(A, ti, B, qi)
-            elif how == "contains":
-                m = kernels.contains(A, ti, B, qi)
-            else:
-                m = kernels.contains(B, qi, A, ti)
+                A = GeomBatch.from_arrow(stab["s_kind"].to_numpy(),
+                                         stab["s_coords"], stab["s_rings"])
+                m, d = _refine_mask(op, how, max_d, A, ti,
+                                    _slim_probe_batch(btab, slim), qi)
             mq, mt = qi[m], ti[m]
-            cols = [pa.array(big_ids[mq]), pa.array(small_ids[mt])]
-            names = ["big_id", "small_id"]
-            if op == "prox":
+            cols = [pa.array(btab["big_id"].to_numpy()[mq]),
+                    pa.array(stab["small_id"].to_numpy()[mt])]
+            if d is not None:
                 cols.append(pa.array(d[m]))
-                names.append("distance")
-            if with_geos:
-                # Arrow-native gather of the geometry columns per RESULT
-                # row (take on list arrays runs in C++)
-                tq, tt = pa.array(mq), pa.array(mt)
-                for c in geo_cols_b:
-                    cols.append(btab.column(c).take(tq))
-                    names.append(c)
-                for c in geo_cols_s:
-                    cols.append(stab.column(c).take(tt))
-                    names.append(c)
-            return pa.Table.from_arrays(cols, names=names)
+            # Arrow-native gather of the carried columns per RESULT row
+            # (take on list arrays runs in C++)
+            tq, tt = pa.array(mq), pa.array(mt)
+            for c in carry:
+                cols.append(btab[c].take(tq) if c in btab.column_names else stab[c].take(tt))
+            return pa.Table.from_arrays(cols, names=schema.fieldNames())
 
         return (
             b.groupby(*group_keys)
@@ -1172,17 +1152,19 @@ class SpatialIndex:
 
     def _plan(self, op: str, how: str | None, with_geos: bool, strategy: str,
               big_kinds) -> tuple:
-        """The one place spatial_join and proximity_map choose their
-        route; the first rule that matches wins:
+        """The one place every join chooses its route — spatial_join,
+        proximity_map and the streaming join alike; the first rule that
+        matches wins:
 
-        cogroup  ``strategy="cogroup"``, or with_geos on a non-broadcast
-                 index under ``"auto"``: each row crosses the Arrow
-                 boundary once per covering cell and the geometries
-                 leave per RESULT row (_cogroup_refine).
+        cogroup  ``strategy="cogroup"``: each row crosses the Arrow
+                 boundary once per covering cell and the output leaves
+                 per RESULT row (_cogroup_refine).
         jvm      an exact JVM predicate applies to the candidate pairs:
                  the rect/point bbox predicate or the unrolled PIP (both
                  need unbuffered bboxes, so max_distance == 0), or the
-                 point-point distance. No Python operator.
+                 point-point distance. No Python operator. with_geos
+                 only keeps the geometry columns on the survivors.
+        cogroup  with_geos on a non-broadcast index under ``"auto"``.
         arrow    otherwise: one mapInArrow refine (_arrow_refine) over
                  the candidate pairs, reading the small geometry from
                  the broadcast, or carried per pair when the index is
@@ -1198,33 +1180,29 @@ class SpatialIndex:
             raise ValueError("strategy must be auto|pairs|cogroup")
         route, pred = "arrow", None
         probe_kind = _probe_kind(big_kinds)
+        reason = f"{probe_kind or 'general'} probes"
         if strategy == "cogroup":
             route, reason = "cogroup", "strategy=cogroup"
-        elif with_geos and strategy == "auto" and not self.broadcast_small:
-            route, reason = "cogroup", "with_geos on a non-broadcast index"
-        elif with_geos:
-            reason = "with_geos probes"
         elif op == "prox":
-            reason = f"{probe_kind or 'general'} probes"
             if probe_kind == "point" and self.small_kinds == {KP}:
                 # the probe bbox is unbuffered: b_xmin == bx exactly
                 route, reason = "jvm", "point-point distance"
                 pred = _point_distance("b_xmin", "b_ymin")
-        else:
-            reason = f"{probe_kind or 'general'} probes"
-            if self.max_distance == 0.0:
-                pred = self._sql_predicate(how, self.small_kinds, big_kinds)
-                if pred is not None:
-                    route, reason = "jvm", "rect/point bbox predicate"
-                else:
-                    npts = self._pip_unroll_npts(how, big_kinds)
-                    if npts is not None:
-                        # point probes are unbuffered, so the bbox
-                        # scalars ARE the point coords bit-exactly and
-                        # b_coords gets pruned from the probe scan
-                        route, reason = "jvm", "unrolled PIP"
-                        pred = self._sql_pip_unrolled("s", npts, "b_xmin", "b_ymin")
-        if route == "arrow":
+        elif self.max_distance == 0.0:
+            pred = self._sql_predicate(how, self.small_kinds, big_kinds)
+            if pred is not None:
+                route, reason = "jvm", "rect/point bbox predicate"
+            else:
+                npts = self._pip_unroll_npts(how, big_kinds)
+                if npts is not None:
+                    # point probes are unbuffered, so the bbox scalars
+                    # ARE the point coords bit-exactly and b_coords gets
+                    # pruned from the probe scan
+                    route, reason = "jvm", "unrolled PIP"
+                    pred = self._sql_pip_unrolled("s", npts, "b_xmin", "b_ymin")
+        if route == "arrow" and with_geos and strategy == "auto" and not self.broadcast_small:
+            route, reason = "cogroup", "with_geos on a non-broadcast index"
+        elif route == "arrow":
             reason += (", small geometry from the broadcast"
                        if self.broadcast_small and not with_geos
                        else ", small geometry carried per pair")
@@ -1232,26 +1210,32 @@ class SpatialIndex:
         return route, reason, pred
 
     def _run(self, op: str, big_df: DataFrame, how: str | None, with_geos: bool,
-             validate: bool, big_kinds, strategy: str, pair_filter) -> DataFrame:
-        """Filter -> dedup -> refine along the route _plan picks."""
+             validate: bool, big_kinds, strategy: str, pair_filter,
+             carry=()) -> DataFrame:
+        """Filter -> dedup -> refine along the route _plan picks. The
+        ``carry`` probe columns (a stream's payload) and, with
+        with_geos, both sides' geometry columns pass through every
+        route to the output rows."""
         route, _, pred = self._plan(op, how, with_geos, strategy, big_kinds)
         probe_kind = _probe_kind(big_kinds)
+        b = self._probe(big_df, validate, probe_kind, keep=carry)
+        carry = list(carry) + (list(_GEO_CARRY) if with_geos else [])
         if route == "cogroup":
-            out = self._cogroup_refine(big_df, validate, op, how, with_geos, probe_kind)
+            out = self._cogroup_refine(b, op, how, with_geos, probe_kind, carry)
             return out.where(pair_filter) if pair_filter is not None else out
-        cand = self._candidates(self._probe(big_df, validate, probe_kind))
+        cand = self._candidates(b)
         if pair_filter is not None:
             # pair-identity predicate: refine is deterministic, so
             # filtering candidates == filtering results, minus the
             # refine work for dropped pairs
             cand = cand.where(pair_filter)
         if route == "jvm" and op == "join":
-            return cand.where(pred).select("big_id", "small_id")
+            return cand.where(pred).select("big_id", "small_id", *carry)
         if route == "jvm":
             return (
                 cand.withColumn("distance", pred)
                 .where(F.col("distance") <= F.lit(self.max_distance))
-                .select("big_id", "small_id", "distance")
+                .select("big_id", "small_id", "distance", *carry)
             )
         fields = [
             T.StructField("big_id", T.LongType(), False),
@@ -1259,7 +1243,6 @@ class SpatialIndex:
         ]
         if op == "prox":
             fields.append(T.StructField("distance", T.DoubleType(), False))
-        carry = [f"{p}_{c}" for p in ("b", "s") for c in _GEO_COLS] if with_geos else []
         fields += [cand.schema[c] for c in carry]
         slim = None if with_geos else probe_kind
         # with_geos carries the small geometry to its output anyway, so
@@ -1284,9 +1267,14 @@ class SpatialIndex:
         side; when both sides are rect/point-only the exact refine is
         pure SQL and the plan never leaves the JVM.
 
+        ``with_geos`` changes the output, not the route choice beyond
+        one rule: the geometry columns ride along whichever route _plan
+        picks, and only a with_geos call that no JVM predicate serves
+        goes to cogroup on a non-broadcast index.
+
         ``strategy``: "auto" lets _plan choose; "pairs" differs from it
-        only by keeping with_geos on the candidate pairs on a
-        non-broadcast index; "cogroup" forces the grouped refine.
+        only by keeping that last with_geos case on the candidate pairs;
+        "cogroup" forces the grouped refine.
 
         ``pair_filter``: optional Column predicate over ONLY
         (big_id, small_id), semantically identical to filtering the

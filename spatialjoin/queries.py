@@ -1412,8 +1412,10 @@ def q_tris_intersect_rects(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_join_with_geos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """with_geos spatial JOIN (src/index.rs:537-599): the contains join
-    returns both sides' geometry through the Arrow refine; projected to
-    oracle-checkable scalars (kinds, probe point, first quad vertex)."""
+    returns both sides' geometry alongside the pairs of the route the
+    planner picks (the unrolled JVM PIP for these uniform quads);
+    projected to oracle-checkable scalars (kinds, probe point, first
+    quad vertex)."""
     quads = _quads_df(spark, sf_dir, "supplier", "s_suppkey")
     pts = _points_df(spark, sf_dir, "customer", "c_custkey")
     idx = SpatialIndex.build(spark, quads, validate=False)
@@ -1454,7 +1456,8 @@ def q_events_tile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_prox_with_geos(spark: SparkSession, sf_dir: str) -> DataFrame:
     """with_geos variant (src/index.rs:449-475): the proximity join
-    returns both sides' geometry columns through the Arrow refine; the
+    returns both sides' geometry columns alongside the pairs of the
+    route the planner picks (the JVM point-point distance here); the
     oracle-checkable projection unpacks them to scalars, proving the
     geometry round-tripped with the pair rows."""
     sup = _points_df(spark, sf_dir, "supplier", "s_suppkey")
@@ -3482,12 +3485,12 @@ def q_events_stream_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """STREAMING SPATIAL JOIN driver row: the events table replayed
     through a real file stream (trigger=availableNow) as a POINT
     stream, exact-joined against a STATIC part-rect SpatialIndex via
-    streaming.stream_points_in_rects — the full filter (cell
-    equi-join) + refine (closed-rect containment) pipeline as pure JVM
-    column ops on a streaming DataFrame — then rolled up per rect in
-    complete mode. stream = batch: the DuckDB twin is the plain
-    nested-loop point-in-rect aggregate."""
-    from .streaming import stream_points_in_rects
+    streaming.stream_points_in_geoms — the planner sends it to the
+    closed-rect JVM predicate, so the filter (cell equi-join) + refine
+    pipeline is pure JVM column ops on a streaming DataFrame — then
+    rolled up per rect in complete mode. stream = batch: the DuckDB
+    twin is the plain nested-loop point-in-rect aggregate."""
+    from .streaming import stream_points_in_geoms
 
     px, py = PX.format(k="event_id"), PY.format(k="event_id")
     path = f"{sf_dir}/events.parquet"
@@ -3504,7 +3507,7 @@ def q_events_stream_pip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     rects = _rects_df(spark, sf_dir, "part", "p_partkey")
     idx = SpatialIndex.build(spark, rects, validate=False)
-    joined = stream_points_in_rects(ev, idx)
+    joined = stream_points_in_geoms(ev, idx, how="contains", carry=("cents",))
     agg = joined.groupBy("small_id").agg(
         F.count(F.lit(1)).alias("n_events"),
         F.sum("cents").alias("sum_cents"),
@@ -3559,10 +3562,10 @@ def q_events_stream_pip_poly(spark: SparkSession, sf_dir: str) -> DataFrame:
     table replayed through a real file stream (trigger=availableNow) as
     a POINT stream, exact-joined against a STATIC supplier-QUAD
     SpatialIndex via streaming.stream_points_in_geoms — cell equi-join
-    + bbox prune (JVM) + ONE stateless mapInArrow point-in-polygon
-    refine over the broadcast quads, on a streaming DataFrame — then
-    rolled up per quad in complete mode. Extends events_stream_pip
-    (pure-JVM, rect-only) to arbitrary small geometries: stream =
+    + reference-point dedup + the planner's unrolled point-in-polygon
+    JVM predicate (the quads share one vertex count), on a streaming
+    DataFrame — then rolled up per quad in complete mode. Extends
+    events_stream_pip (rect-only) to polygon small sides: stream =
     batch, so the DuckDB twin is the strict-interior PIP aggregate."""
     from .streaming import stream_points_in_geoms
 

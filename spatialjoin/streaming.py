@@ -4,10 +4,12 @@ The reference crate's "streaming" is pull-based bounded-memory
 iterators (README.md:206-213), not event-time streaming — SURVEY.md §2.2
 records that. This module adds the Spark-native streaming counterpart
 anyway: a watermarked, windowed per-cell aggregation over a stream of
-located events, plus a stream-static spatial enrichment join against a
-built SpatialIndex's cell table. Tested end-to-end with a file stream
-(tests write parquet increments) — the same code runs on Kafka/rate
-sources unchanged.
+located events, a stateful per-cell sketch, and one stream-static
+spatial join (``stream_points_in_geoms``) that feeds the stream to a
+built SpatialIndex as point probes, so it takes the same planner
+routes as the batch join. Tested end-to-end with a file stream (tests
+write parquet increments) — the same code runs on Kafka/rate sources
+unchanged.
 """
 
 from __future__ import annotations
@@ -15,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .geom import POINT
 from .grid import Grid
 from .index import SpatialIndex, _clamped_cell_coord
 
@@ -113,116 +116,35 @@ def stateful_cell_sketch(events: DataFrame, grid: Grid, res: int, k: int = 64,
     )
 
 
-def enrich_stream_with_index(events: DataFrame, index: SpatialIndex,
-                             x_col: str = "x", y_col: str = "y") -> DataFrame:
-    """Stream-static join: tag each streaming event with the indexed
-    (small-side) geometries whose cell it lands in — the streaming
-    filter phase of a spatial join; exact refine can follow downstream
-    in foreachBatch where batch semantics apply."""
-    cells = with_event_cells(events, index.grid, index.resolution, x_col, y_col)
-    small = index.small_cells.select("cell", "small_id")
-    return cells.join(small, on="cell", how="inner")
-
-
-def stream_points_in_rects(events: DataFrame, index: SpatialIndex,
-                           x_col: str = "x", y_col: str = "y") -> DataFrame:
-    """EXACT streaming spatial join of a point stream against a RECT
-    small side — the full filter+refine pipeline, valid on a streaming
-    DataFrame: the cell equi-join is the filter phase and the
-    closed-rect containment test on the index's stored bbox columns is
-    the exact refine (for RECTs the bbox IS the geometry; inclusive
-    boundaries match kernels.py's Rect semantics). Pure JVM end-to-end
-    — no Python operator, no state, so it composes with any downstream
-    watermark/window. Each point covers exactly ONE cell, so no pair
-    dedup is needed (a rect spans many cells; the pair still arises
-    only via the point's single cell).
-
-    Requires a plain single-level index built with max_distance=0 (the
-    stored bbox would otherwise be the buffered rect, breaking
-    exactness) whose small side is all RECTs."""
-    from .geom import RECT
-
-    if index.max_distance:
-        raise ValueError("stream_points_in_rects needs max_distance=0 "
-                         "(buffered bboxes are not the exact rects)")
-    if index.small_fine is not None or index.levels is not None:
-        raise ValueError("stream_points_in_rects needs a plain "
-                         "single-level index (no hot-split/multilevel)")
-    if index.small_kinds != {RECT}:
-        raise ValueError("stream_points_in_rects: small side must be "
-                         "all RECTs")
-    cells = with_event_cells(events, index.grid, index.resolution, x_col, y_col)
-    small = index.small_cells.select(
-        "cell", "small_id", "s_xmin", "s_ymin", "s_xmax", "s_ymax")
-    x, y = F.col(x_col), F.col(y_col)
-    return (
-        cells.join(small, on="cell", how="inner")
-        .where((x >= F.col("s_xmin")) & (x <= F.col("s_xmax"))
-               & (y >= F.col("s_ymin")) & (y <= F.col("s_ymax")))
-        .drop("cell", "s_xmin", "s_ymin", "s_xmax", "s_ymax")
-    )
-
-
 def stream_points_in_geoms(events: DataFrame, index: SpatialIndex,
                            x_col: str = "x", y_col: str = "y",
                            id_col: str = "event_id",
                            how: str = "contains",
                            carry: tuple = ()) -> DataFrame:
-    """EXACT streaming spatial join of a point stream against ANY
-    static small side — polygons with holes, triangles, linestrings —
-    via the engine's full filter+refine pipeline on a streaming
-    DataFrame: cell equi-join (filter) + JVM bbox prune + ONE stateless
-    mapInArrow kernel refine over the broadcast small geometries
-    (the same _arrow_refine stage as the batch arrow route). No
-    state, no watermark requirement — composes with any
-    downstream windowed aggregation. Output: DF[big_id, small_id,
-    *carry] with big_id = the stream's id column; ``carry`` names
-    extra stream columns passed through the refine to matching rows
-    (a post-refine stream-stream re-join would be unsupported in
+    """EXACT streaming spatial join of a point stream against a static
+    SpatialIndex of any kind (buffered, non-broadcast, hot-split or
+    multilevel; any small geometry). A probe adapter: the stream's rows
+    become POINT probes (``id_col`` -> id, coords = [x, y]) and run
+    through the engine's own filter -> dedup -> refine, along the route
+    SpatialIndex._plan picks — a JVM predicate (closed-rect bbox
+    logic, the unrolled point-in-polygon) or one stateless mapInArrow
+    kernel refine. No state, no watermark requirement, so it composes
+    with any downstream windowed aggregation. Output: DF[big_id,
+    small_id, *carry] with big_id = the stream's id column; ``carry``
+    names extra stream columns passed through the refine to matching
+    rows (a post-refine stream-stream re-join would be unsupported in
     complete output mode).
 
-    Each point covers exactly ONE cell, so candidate pairs are unique
-    by construction (no reference-point dedup stage is needed — same
-    argument as stream_points_in_rects). Stream rows are not validated
-    (validation needs an action); NaN coordinates never match.
-
-    Requires a plain single-level BROADCAST index (small geometries
-    gathered at build) with max_distance=0."""
-    from pyspark.sql import types as T
-
-    from .index import _arrow_refine
-
-    if index.max_distance:
-        raise ValueError("stream_points_in_geoms needs max_distance=0 "
-                         "(buffered bboxes would skip the exact refine)")
-    if index.small_fine is not None or index.levels is not None:
-        raise ValueError("stream_points_in_geoms needs a plain "
-                         "single-level index (no hot-split/multilevel)")
-    if index.small_geo_bc is None:
-        raise ValueError("stream_points_in_geoms needs a broadcast "
-                         "index (small geometries gathered at build)")
+    Stream rows are not validated (validation needs an action); NaN
+    coordinates never match."""
     if how not in ("intersects", "contains", "within"):
         raise ValueError("how must be intersects|contains|within")
-    cells = with_event_cells(events, index.grid, index.resolution, x_col, y_col)
-    small = index.small_cells.select(
-        "cell", "small_id", "s_xmin", "s_ymin", "s_xmax", "s_ymax")
-    x, y = F.col(x_col), F.col(y_col)
-    cand = (
-        cells.join(small, on="cell", how="inner")
-        .where((x >= F.col("s_xmin")) & (x <= F.col("s_xmax"))
-               & (y >= F.col("s_ymin")) & (y <= F.col("s_ymax")))
-        .select(
-            F.col(id_col).cast("long").alias("big_id"), "small_id",
-            x.cast("double").alias("bx"), y.cast("double").alias("by"),
-            *[F.col(c) for c in carry],
-        )
+    probe = events.select(
+        F.col(id_col).cast("long").alias("id"),
+        F.lit(POINT).alias("kind"),
+        F.array(F.col(x_col).cast("double"), F.col(y_col).cast("double")).alias("coords"),
+        F.array().cast("array<int>").alias("rings"),
+        *carry,
     )
-    fields = [
-        T.StructField("big_id", T.LongType(), False),
-        T.StructField("small_id", T.LongType(), False),
-    ] + [cand.schema[c] for c in carry]
-    return cand.mapInArrow(
-        _arrow_refine("join", how=how, slim="point", bc=index.small_geo_bc,
-                      carry=tuple(carry)),
-        T.StructType(fields),
-    )
+    return index._run("join", probe, how, False, False, {POINT}, "auto", None,
+                      carry=tuple(carry))

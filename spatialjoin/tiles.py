@@ -24,7 +24,7 @@ from pyspark.sql import types as T
 from . import kernels
 from .geom import RECT, GeomBatch
 from .grid import Grid
-from .index import _prefixed, with_bbox, with_cells, validate_geoms
+from .index import _prefixed, _rect_batch, with_bbox, with_cells, validate_geoms
 
 
 def assign_tiles(geoms_df: DataFrame, zoom: int, extent, validate: bool = True,
@@ -38,7 +38,8 @@ def assign_tiles(geoms_df: DataFrame, zoom: int, extent, validate: bool = True,
     same doubles the kernel compares (_int_pt_rect/_int_rect_rect are
     closed bbox logic; tile corners recomputed with the identical
     x0 + t*tw (+tw) float expressions) — and the plan never leaves the
-    JVM (r6: MapInPandas removed for these workloads)."""
+    JVM. Other kinds refine in one mapInArrow: tile rects from the same
+    arithmetic, geometry decoded as flat Arrow buffers."""
     from .geom import POINT
 
     grid = Grid(extent)
@@ -67,43 +68,25 @@ def assign_tiles(geoms_df: DataFrame, zoom: int, extent, validate: bool = True,
             F.col("cx").alias("tx"), F.col("cy").alias("ty"),
         )
 
-    schema = T.StructType(
-        [
-            T.StructField("id", T.LongType(), False),
-            T.StructField("tile", T.LongType(), False),
-            T.StructField("tx", T.LongType(), False),
-            T.StructField("ty", T.LongType(), False),
-        ]
-    )
+    def refine(it):
+        import pyarrow as pa
 
-    def refine(iterator):
-        for pdf in iterator:
-            if len(pdf) == 0:
+        for batch in it:
+            if batch.num_rows == 0:
                 continue
-            m = len(pdf)
-            B = GeomBatch.from_columns(
-                pdf["b_kind"].to_numpy(), pdf["b_coords"].to_list(), pdf["b_rings"].to_list()
-            )
-            tx = pdf["cx"].to_numpy()
-            ty = pdf["cy"].to_numpy()
-            txmin = x0 + tx * tw
-            tymin = y0 + ty * th
-            tile_coords = np.stack([txmin, tymin, txmin + tw, tymin + th], axis=1)
-            A = GeomBatch(
-                kind=np.full(m, RECT, dtype=np.int8),
-                offs=np.arange(0, 2 * m + 1, 2, dtype=np.int64),
-                xs=tile_coords[:, [0, 2]].ravel(),
-                ys=tile_coords[:, [1, 3]].ravel(),
-                ring_counts=np.zeros(m, dtype=np.int32),
-                ring_starts=np.zeros(0, dtype=np.int64),
-            )
-            i = np.arange(m, dtype=np.int64)
-            mask = kernels.intersects(A, i, B, i)
-            out = pdf.loc[mask, ["id", "cell", "cx", "cy"]]
-            out.columns = ["id", "tile", "tx", "ty"]
-            yield out
+            col = {nm: batch.column(i) for i, nm in enumerate(batch.schema.names)}
+            txmin = x0 + col["tx"].to_numpy(zero_copy_only=False) * tw
+            tymin = y0 + col["ty"].to_numpy(zero_copy_only=False) * th
+            A = _rect_batch(txmin, tymin, txmin + tw, tymin + th)
+            B = GeomBatch.from_arrow(col["b_kind"].to_numpy(zero_copy_only=False),
+                                     col["b_coords"], col["b_rings"])
+            i = np.arange(batch.num_rows, dtype=np.int64)
+            yield batch.select(["id", "tile", "tx", "ty"]).filter(
+                pa.array(kernels.intersects(A, i, B, i)))
 
-    return g.mapInPandas(refine, schema)
+    g = g.select("id", F.col("cell").alias("tile"), F.col("cx").alias("tx"),
+                 F.col("cy").alias("ty"), "b_kind", "b_coords", "b_rings")
+    return g.mapInArrow(refine, "id long, tile long, tx long, ty long")
 
 
 TILE_PIXEL_SCHEMA = T.StructType(

@@ -1,10 +1,8 @@
-"""Grid properties: pack/unpack round-trip, covering ⊇ bbox, k-ring."""
+"""Grid properties: pack/unpack round-trip, clamped cells, resolution choice."""
 
 from __future__ import annotations
 
 import numpy as np
-from hypothesis import given, settings
-from hypothesis import strategies as st
 
 from spatialjoin.grid import Grid
 
@@ -29,48 +27,6 @@ def test_cell_of_in_extent():
     cx, cy, res = Grid.unpack(cells)
     assert (cx >= 0).all() and (cx < 32).all()
     assert (cy >= 0).all() and (cy < 32).all()
-
-
-coord = st.floats(min_value=-9.99, max_value=9.99, allow_nan=False, width=64)
-
-
-@settings(max_examples=100, deadline=None)
-@given(coord, coord, coord, coord, st.integers(min_value=1, max_value=5))
-def test_cover_contains_point_cells(x1, y1, x2, y2, res):
-    xmin, xmax = min(x1, x2), max(x1, x2)
-    ymin, ymax = min(y1, y2), max(y1, y2)
-    owner, cells = G.cover_bbox(
-        np.array([xmin]), np.array([ymin]), np.array([xmax]), np.array([ymax]), res
-    )
-    cover = set(cells.tolist())
-    # every sampled point inside the bbox must fall into a covered cell
-    for fx in (0.0, 0.37, 1.0):
-        for fy in (0.0, 0.61, 1.0):
-            px = xmin + fx * (xmax - xmin)
-            py = ymin + fy * (ymax - ymin)
-            assert int(G.cell_of(np.array([px]), np.array([py]), res)[0]) in cover
-
-
-def test_cover_multiple_rows_owner_alignment():
-    owner, cells = G.cover_bbox(
-        np.array([-1.0, 5.0]), np.array([-1.0, 5.0]),
-        np.array([1.0, 5.1]), np.array([1.0, 5.1]), 4,
-    )
-    assert set(owner.tolist()) == {0, 1}
-
-
-def test_k_ring_counts_and_symmetry():
-    center = G.cell_of(np.array([0.0]), np.array([0.0]), 6)
-    owner, ring = G.k_ring(center, 1)
-    assert len(ring) == 9  # interior cell: full 3x3
-    # corner cell clips
-    corner = Grid.pack(np.array([0]), np.array([0]), 6)
-    _, ring2 = G.k_ring(corner, 1)
-    assert len(ring2) == 4
-    # symmetry: b in ring(a) <=> a in ring(b)
-    for b in ring.tolist():
-        _, rb = G.k_ring(np.array([b]), 1)
-        assert int(center[0]) in set(rb.tolist())
 
 
 def test_choose_resolution_monotone():

@@ -475,8 +475,12 @@ _ROUTES = {
                        {"big_kinds": {RECT}, "strategy": "cogroup"}, "cogroup"),
     "shuffle-with-geos": (TRIANGLE, POINT, {"broadcast": False}, "join", {"with_geos": True},
                           "cogroup"),
+    "shuffle-with-geos-jvm": (RECT, POINT, {"broadcast": False}, "join",
+                              {"with_geos": True, "big_kinds": {POINT}}, "jvm"),
     "broadcast-with-geos": (TRIANGLE, POINT, {"max_distance": 0.3}, "prox",
                             {"with_geos": True}, "arrow"),
+    "broadcast-with-geos-jvm": (POINT, POINT, {"max_distance": 0.4}, "prox",
+                                {"with_geos": True, "big_kinds": {POINT}}, "jvm"),
     "buffered-slim-join": (TRIANGLE, POINT, {"max_distance": 0.5, "broadcast": False}, "join",
                            {"big_kinds": {POINT}}, "arrow"),
 }

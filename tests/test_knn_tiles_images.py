@@ -507,7 +507,9 @@ def test_assign_tiles_polygon_refines(spark):
     rows = [(POLYGON, [0.5, 0.5, 7.5, 0.5, 7.5, 0.6], [0]),
             (POLYGON, [0.5, 0.5, 1.0, 0.5, 1.0, 1.0], [0])]
     df = geoms_to_df(spark, rows)
-    out = assign_tiles(df, zoom=1, extent=ext).collect()
+    tiles = assign_tiles(df, zoom=1, extent=ext)
+    assert "MapInPandas" not in tiles._jdf.queryExecution().toString()
+    out = tiles.collect()
     got = sorted((r.id, r.tx, r.ty) for r in out)
     assert [g for g in got if g[0] == 0] == [(0, 0, 0), (0, 1, 0)]
     assert [g for g in got if g[0] == 1] == [(1, 0, 0)]

@@ -416,91 +416,125 @@ def test_synth_av_clips_roundtrip(spark):
     av.unpersist()
 
 
-def test_stream_points_in_rects_guards_and_batch_equivalence(spark):
-    """stream_points_in_rects: (a) refuses buffered / multilevel /
-    non-RECT indexes; (b) on a BATCH frame its output equals the
-    engine's spatial_join contains rows (the streaming plan is the same
-    stateless column math)."""
-    import pytest
+def _stream_smalls(kind, rng, n=90):
+    """Small sides of the streaming join tests: closed rects, uniform
+    5-point quads (the unrolled PIP's shape) or triangles."""
+    from spatialjoin.geom import POLYGON, RECT, TRIANGLE
 
-    from spatialjoin.geom import POINT, RECT
-    from spatialjoin.index import SpatialIndex
-    from spatialjoin.sparkutil import geoms_to_df
-    from spatialjoin.streaming import stream_points_in_rects
+    rows = []
+    for _ in range(n):
+        x, y = rng.uniform(-8, 8), rng.uniform(-8, 8)
+        a, b = rng.uniform(0.1, 0.9), rng.uniform(0.1, 0.9)
+        if kind == "rect":
+            rows.append((RECT, [x - a, y - b, x + a, y + b]))
+        elif kind == "quad":
+            rows.append((POLYGON, [x + a, y, x, y + b, x - a, y, x, y - b, x + a, y], [0]))
+        else:
+            rows.append((TRIANGLE, [x, y, x + 2 * a, y, x, y + 2 * b]))
+    return rows
 
+
+_STREAM_INDEXES = {
+    "plain": {},
+    "buffered": {"max_distance": 0.3},
+    "nobc": {"broadcast": False},
+    "hot": {"hot_threshold": 2},
+    "multilevel": {"multilevel": True},
+}
+_PY_OPS = ("MapInArrow", "MapInPandas", "ArrowEvalPython", "BatchEvalPython",
+           "FlatMapCoGroupsInArrow")
+
+
+@pytest.mark.parametrize("index", list(_STREAM_INDEXES))
+@pytest.mark.parametrize("small", ["rect", "quad", "tri"])
+def test_stream_join_equals_spatial_join(spark, tmp_path, caplog, small, index):
+    """stream_points_in_geoms is a probe adapter over the engine's own
+    pipeline, so it serves every index kind (buffered, non-broadcast,
+    hot-split, multilevel) and equals spatial_join's rows plus the
+    carried payload for all three predicates. Rect smalls, and quads
+    under contains, take the JVM predicate with no Python operator
+    when the index is unbuffered. The hot-split quad case runs the
+    join on a real availableNow file stream."""
+    import logging
     import random
+    from functools import reduce
 
-    rng = random.Random(5)
-    rects = [
-        (RECT, [x - rng.uniform(0.05, 0.4), y - rng.uniform(0.05, 0.4),
-                x + rng.uniform(0.05, 0.4), y + rng.uniform(0.05, 0.4)])
-        for _ in range(150)
-        for x, y in [(rng.uniform(-8, 8), rng.uniform(-8, 8))]
-    ]
-    pts = [(POINT, [rng.uniform(-9, 9), rng.uniform(-9, 9)]) for _ in range(800)]
-    rdf, pdf = geoms_to_df(spark, rects), geoms_to_df(spark, pts)
+    from pyspark.sql import DataFrame
+    from pyspark.sql import functions as F
 
-    buffered = SpatialIndex.build(spark, rdf, max_distance=0.5, validate=False)
-    with pytest.raises(ValueError, match="max_distance"):
-        stream_points_in_rects(pdf.selectExpr(
-            "id", "coords[0] AS x", "coords[1] AS y"), buffered)
-    buffered.unpersist()
-    notrect = SpatialIndex.build(spark, pdf, validate=False)
-    with pytest.raises(ValueError, match="RECT"):
-        stream_points_in_rects(pdf.selectExpr(
-            "id", "coords[0] AS x", "coords[1] AS y"), notrect)
-    notrect.unpersist()
-
-    idx = SpatialIndex.build(spark, rdf, validate=False)
-    ev = pdf.selectExpr("id AS event_id", "coords[0] AS x", "coords[1] AS y")
-    got = {(r.event_id, r.small_id)
-           for r in stream_points_in_rects(ev, idx).collect()}
-    want = {(r.big_id, r.small_id)
-            for r in idx.spatial_join(pdf, how="contains", validate=False).collect()}
-    idx.unpersist()
-    assert got == want and len(got) > 0
-
-
-def test_stream_points_in_geoms_guards_carry_and_batch_equivalence(spark):
-    """stream_points_in_geoms (kernel refine on a stream): (a) refuses
-    buffered and non-broadcast indexes; (b) on a BATCH frame with a
-    polygon small side its id pairs equal the engine's spatial_join
-    contains rows; (c) carried payload columns survive the Arrow
-    refine unchanged on exactly the matching rows."""
-    import random
-
-    import pytest
-
-    from spatialjoin.geom import POINT, POLYGON
+    from spatialjoin.geom import POINT
     from spatialjoin.index import SpatialIndex
     from spatialjoin.sparkutil import geoms_to_df
     from spatialjoin.streaming import stream_points_in_geoms
 
-    rng = random.Random(11)
-    quads = []
-    for _ in range(120):
-        x, y = rng.uniform(-8, 8), rng.uniform(-8, 8)
-        a, b = rng.uniform(0.1, 0.9), rng.uniform(0.1, 0.9)
-        quads.append((POLYGON, [x + a, y, x, y + b, x - a, y, x, y - b, x + a, y], [0]))
-    pts = [(POINT, [rng.uniform(-9, 9), rng.uniform(-9, 9)]) for _ in range(700)]
-    qdf, pdf = geoms_to_df(spark, quads), geoms_to_df(spark, pts)
+    rng = random.Random(f"{small}-{index}")
+    smalls = geoms_to_df(spark, _stream_smalls(small, rng))
+    pdf = geoms_to_df(spark, [(POINT, [rng.uniform(-9, 9), rng.uniform(-9, 9)])
+                              for _ in range(500)])
     ev = pdf.selectExpr("id AS event_id", "coords[0] AS x", "coords[1] AS y",
                         "id * 7 AS payload")
+    idx = SpatialIndex.build(spark, smalls, validate=False, **_STREAM_INDEXES[index])
+    caplog.set_level(logging.DEBUG, logger="spatialjoin.index")
+    want = {}
+    for how in ("intersects", "contains", "within"):
+        want[how] = {(r.big_id, r.small_id, r.big_id * 7)
+                     for r in idx.spatial_join(pdf, how=how, validate=False).collect()}
+        caplog.clear()
+        out = stream_points_in_geoms(ev, idx, how=how, carry=("payload",))
+        jvm = idx.max_distance == 0.0 and (
+            small == "rect" or (small == "quad" and how == "contains"))
+        assert [m.split(" reason=")[0] for m in caplog.messages] == [
+            f"join route={'jvm' if jvm else 'arrow'}"]
+        if jvm:
+            plan = out._jdf.queryExecution().executedPlan().toString()
+            assert not any(op in plan for op in _PY_OPS), plan
+        got = {(r.big_id, r.small_id, r.payload) for r in out.collect()}
+        assert got == want[how], (how, len(got), len(want[how]))
+    assert want["intersects"]
+    if (small, index) == ("quad", "hot"):
+        src = str(tmp_path / "points")
+        ev.write.parquet(src)
+        stream = spark.readStream.schema(ev.schema).parquet(src)
+        joined = reduce(DataFrame.unionByName, [
+            stream_points_in_geoms(stream, idx, how=h, carry=("payload",))
+            .withColumn("how", F.lit(h)) for h in want])
+        q = (joined.writeStream.format("memory").queryName("stream_join_hot")
+             .trigger(availableNow=True).start())
+        assert q.awaitTermination(300)
+        rows = spark.table("stream_join_hot").collect()
+        for how, rows_want in want.items():
+            assert {(r.big_id, r.small_id, r.payload)
+                    for r in rows if r.how == how} == rows_want, how
+    idx.unpersist()
 
-    buffered = SpatialIndex.build(spark, qdf, max_distance=0.5, validate=False)
-    with pytest.raises(ValueError, match="max_distance"):
-        stream_points_in_geoms(ev, buffered)
-    buffered.unpersist()
-    nobc = SpatialIndex.build(spark, qdf, validate=False, broadcast=False)
-    with pytest.raises(ValueError, match="broadcast"):
-        stream_points_in_geoms(ev, nobc)
-    nobc.unpersist()
 
-    idx = SpatialIndex.build(spark, qdf, validate=False, broadcast=True)
+def test_stream_points_in_geoms_guards_carry_and_batch_equivalence(spark):
+    """stream_points_in_geoms: (a) refuses an unknown ``how``; (b) on a
+    BATCH frame with a polygon small side its rows equal the
+    nested-loop oracle's contains pairs; (c) carried payload columns
+    survive the refine unchanged on exactly the matching rows."""
+    import random
+
+    from spatialjoin.geom import POINT, GeomBatch
+    from spatialjoin.index import SpatialIndex
+    from spatialjoin.oracle import slow_spatial_join
+    from spatialjoin.sparkutil import geoms_to_df
+    from spatialjoin.streaming import stream_points_in_geoms
+
+    rng = random.Random(11)
+    quads = _stream_smalls("quad", rng, 120)
+    pts = [(POINT, [rng.uniform(-9, 9), rng.uniform(-9, 9)]) for _ in range(700)]
+    ev = geoms_to_df(spark, pts).selectExpr(
+        "id AS event_id", "coords[0] AS x", "coords[1] AS y", "id * 7 AS payload")
+    idx = SpatialIndex.build(spark, geoms_to_df(spark, quads), validate=False)
+    with pytest.raises(ValueError, match="how must be"):
+        stream_points_in_geoms(ev, idx, how="touches")
     got = {(r.big_id, r.small_id, r.payload)
            for r in stream_points_in_geoms(ev, idx, carry=("payload",)).collect()}
-    want = {(r.big_id, r.small_id, r.big_id * 7)
-            for r in idx.spatial_join(pdf, how="contains", validate=False,
-                                      big_kinds={POINT}).collect()}
+    def batch(rows):
+        return GeomBatch.from_lists([r[0] for r in rows], [r[1] for r in rows],
+                                    [r[2] if len(r) > 2 else None for r in rows])
+
+    want = {(b, s, b * 7) for b, s in slow_spatial_join(batch(quads), batch(pts), "contains")}
     idx.unpersist()
     assert got == want and len(got) > 0
